@@ -41,11 +41,6 @@ TABLE_COLUMNS: dict[str, list[str]] = {
 }
 
 
-def seed_table_names(spark: SparkSession) -> DataFrame:
-    rows = [(i + 1, t) for i, t in enumerate(sorted(TABLE_COLUMNS))]
-    return seed_df(spark, rows, "table_id int, table_name string")
-
-
 def seed_table_columns(spark: SparkSession) -> DataFrame:
     rows = []
     for t in sorted(TABLE_COLUMNS):

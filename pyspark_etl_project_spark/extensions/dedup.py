@@ -755,10 +755,11 @@ def cross_source_overlap(df, id_col: str, text_col: str, source_col: str,
 
     Scale shape: fingerprinting is the winnowing pass (per-doc window,
     no global state); the source tag joins back on the doc id (uniform
-    key); the pair join shuffles on the fingerprint — per-fingerprint
-    groups are bounded by the NUMBER OF SOURCES, so the self-join can
-    never explode the way a doc-level self-join would; per-source
-    totals are k rows and broadcast into the final ppm expression."""
+    key); one shuffle on the fingerprint collapses each fingerprint to
+    its distinct source set — bounded by the NUMBER OF SOURCES — and
+    the source pairs are exploded from that set, so there is no
+    self-join; per-source totals are k rows and broadcast into the
+    final ppm expression."""
     from pyspark_etl_project_spark.extensions.text import (
         winnowing_fingerprints)
 

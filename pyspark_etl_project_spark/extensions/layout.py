@@ -63,21 +63,6 @@ def zorder_sql_expr(col_names: list[str], bits: int = 8) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_layout(df: DataFrame, cols: list[str], bits: int = 8,
-                  num_partitions: int | None = None,
-                  out_col: str = "zval") -> DataFrame:
-    """Cluster ``df`` for multi-dimensional skipping: range-partition on
-    the z-value (each output partition owns a contiguous z range ⇒ a
-    tight hyper-rectangle in the original dimensions) and sort rows
-    within partitions. Written out, every file's min-max stats are
-    selective for filters on ANY of ``cols``."""
-    z = zorder_value(list(cols), bits).alias(out_col)
-    with_z = df.withColumn(out_col, z)
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return (with_z.repartitionByRange(n, F.col(out_col))
-                  .sortWithinPartitions(out_col))
-
-
 # --- deterministic global shuffle ------------------------------------------
 # Training pipelines need the corpus in a pseudo-random but REPRODUCIBLE
 # order (same seed ⇒ same order, across reruns and cluster sizes).

@@ -202,7 +202,7 @@ def ivf_cell(vec_col: Column | str,
     # ties resolve to the smallest centroid id, matching the SQL twin's
     # ORDER BY score DESC, cid ASC.
     if isinstance(vec_col, str):
-        vec_sql = f"`{vec_col}`"
+        vec_sql = "`" + vec_col.replace("`", "``") + "`"
         scores_sql = "array(" + ",".join(
             _affinity_sql(vec_sql, ce, round_digits)
             for _cid, ce in cents) + ")"

@@ -90,13 +90,6 @@ def dup_ngram_bp(col: Column | str, n: int = 2) -> Column:
     ).otherwise(F.lit(0).cast("bigint"))
 
 
-def avg_token_length(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    t = tokens(c)
-    total = F.aggregate(t, F.lit(0), lambda acc, x: acc + F.length(x))
-    return total.cast("double") / F.size(t)
-
-
 def punct_ratio(col: Column | str) -> Column:
     """Punctuation characters / total characters."""
     c = F.col(col) if isinstance(col, str) else col
@@ -469,16 +462,6 @@ def alnum_tokens(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(F.lower(c), ALNUM_TOKEN_RE),
                     lambda x: x != "")
-
-
-def corpus_token_frequencies(df, text_col: str):
-    """Global (token, freq) table: explode + groupBy. Partial (map-side)
-    aggregation absorbs the per-document token multiplicity before the
-    shuffle, so shuffle rows ~ distinct tokens per partition — at 100 TB
-    the exchange carries the vocabulary, not the corpus."""
-    return (df.select(F.explode(alnum_tokens(text_col)).alias("token"))
-              .groupBy("token")
-              .agg(F.count(F.lit(1)).alias("freq")))
 
 
 def rare_token_scores(df, id_col: str, text_col: str,

@@ -198,13 +198,6 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
     return out.drop("_salt")
 
 
-def bucket_points(col: Column, width: int) -> Column:
-    """Bucket id for a point value (shared helper for pre-bucketed
-    storage layouts: write both sides partitioned by this to make the
-    range join a partition-local merge)."""
-    return _idiv(col, width)
-
-
 def compact_small_files(spark, path: str, target_files: int) -> int:
     """Rewrite a parquet directory into ``target_files`` files — the
     maintenance pass a streaming foreachBatch sink needs (every

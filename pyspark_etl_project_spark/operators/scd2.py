@@ -132,72 +132,85 @@ def mart_bucket(key: str = KEY, num_buckets: int = 16):
     return F.pmod(F.xxhash64(F.col(key)), F.lit(num_buckets)).cast("int")
 
 
-def _check_mart_layout(spark, path: str, partition_col: str | None,
-                       num_buckets: int | None) -> None:
-    """Fail fast when the existing on-disk layout disagrees with the
-    requested bucketing. Dynamic overwrite only replaces partitions the
-    incoming frame produces, so writing MART_BUCKET=* dirs into a
-    legacy SOURCE_ID-only mart (or vice versa) leaves the old files in
-    place alongside the new layout — every read then double-counts.
-    Uses the Hadoop FileSystem API so the check works on HDFS/S3, not
-    just local paths."""
+def _layout_error(path: str, detail: str) -> ValueError:
+    """The one refusal for a mart directory write_mart did not lay out:
+    dynamic overwrite only replaces the partitions the incoming frame
+    produces, so writing beside foreign files (or with a changed
+    num_buckets) leaves them in place and every read double-counts."""
+    return ValueError(
+        f"mart at {path} is not in the bucketed mart layout ({detail}); "
+        "a write under dynamic overwrite would leave those files in "
+        "place and duplicate rows on read. Rebuild the mart with "
+        "write_mart first.")
+
+
+def _bucket_dir_ids(spark, path: str, partition_col: str | None) -> list[int]:
+    """The MART_BUCKET ids on disk at ``path``, after checking that the
+    directory holds only write_mart's layout: ``MART_BUCKET=<id>`` dirs,
+    under ``<partition_col>=<value>`` dirs when a partition column is
+    set. An absent or empty path is an empty mart. Uses the Hadoop
+    FileSystem API so the check works on HDFS/S3, not just local
+    paths."""
     from pyspark_etl_project_spark.operators.fs import hadoop_fs
 
     _, fs, hpath = hadoop_fs(spark, path)
     if not fs.exists(hpath):
-        return
+        return []
+
     # Hidden-entry convention matches Spark's own (and the band-index
     # guard's): BOTH '_' and '.' prefixes — a stray .DS_Store or editor
-    # dot-temp in the mart dir must not raise the legacy-layout refusal.
-    entries = [s for s in fs.listStatus(hpath)
-               if not s.getPath().getName().startswith(("_", "."))]
-    if not entries:
-        return
+    # dot-temp in the mart dir must not raise the layout refusal. One
+    # (name, is_dir, path) tuple per entry keeps py4j calls per entry
+    # constant.
+    def visible(p):
+        out = []
+        for st in fs.listStatus(p):
+            jp = st.getPath()
+            name = jp.getName()
+            if not name.startswith(("_", ".")):
+                out.append((name, st.isDirectory(), jp))
+        return out
+
+    def strays(entries, col, digits=False):
+        return [n for n, is_dir, _ in entries
+                if not (is_dir and n.startswith(col + "=")
+                        and (n[len(col) + 1:].isdigit() or not digits))]
+
+    entries = visible(hpath)
     if partition_col is not None:
-        dirs = [s for s in entries if s.isDirectory()
-                and s.getPath().getName().startswith(partition_col + "=")]
-        if not dirs:
-            raise ValueError(
-                f"mart at {path} is not partitioned by {partition_col} "
-                f"(found {[s.getPath().getName() for s in entries[:4]]}); "
-                "refusing to mix layouts under dynamic overwrite")
-        children = [c for d in dirs for c in fs.listStatus(d.getPath())
-                    if not c.getPath().getName().startswith(("_", "."))]
-    else:
-        children = entries
-    bucket_dirs = [c.getPath().getName() for c in children
-                   if c.isDirectory()
-                   and c.getPath().getName().startswith(MART_BUCKET_COL + "=")]
-    plain = [c.getPath().getName() for c in children
-             if c.getPath().getName() not in bucket_dirs]
-    if num_buckets is not None:
-        if plain and not bucket_dirs:
-            raise ValueError(
-                f"mart at {path} has a legacy un-bucketed layout; a "
-                f"bucketed write (num_buckets={num_buckets}) under "
-                "dynamic overwrite would leave the legacy files in "
-                "place and duplicate rows on read. Rewrite the mart "
-                "once with the new layout, or pass num_buckets=None.")
-        stale = [d for d in bucket_dirs
-                 if int(d.split("=", 1)[1]) >= num_buckets]
-        if stale:
-            raise ValueError(
-                f"mart at {path} has bucket dirs {stale[:4]} outside "
-                f"num_buckets={num_buckets}; num_buckets must stay "
-                "constant for a mart path (dynamic overwrite would "
-                "orphan the out-of-range buckets).")
-    elif bucket_dirs:
-        raise ValueError(
-            f"mart at {path} is bucket-partitioned ({bucket_dirs[:4]}); "
-            "an un-bucketed write (num_buckets=None) under dynamic "
-            "overwrite would leave the bucket dirs in place and "
-            "duplicate rows on read.")
+        bad = strays(entries, partition_col)
+        if bad:
+            raise _layout_error(
+                path, f"expected {partition_col}=<value> dirs, found "
+                f"{bad[:4]}")
+        entries = [c for _, _, jp in entries for c in visible(jp)]
+    bad = strays(entries, MART_BUCKET_COL, digits=True)
+    if bad:
+        raise _layout_error(
+            path, f"expected {MART_BUCKET_COL}=<id> dirs, found {bad[:4]}")
+    return [int(n.split("=", 1)[1]) for n, _, _ in entries]
+
+
+def _check_mart_layout(spark, path: str, partition_col: str | None,
+                       num_buckets: int) -> None:
+    """Fail fast, before any data moves, when the on-disk layout at
+    ``path`` is not the one this write would produce: a directory whose
+    entries are not in the bucketed layout, missing ``partition_col``
+    dirs, or bucket ids at or above ``num_buckets`` (num_buckets must
+    stay constant for a mart path)."""
+    stale = sorted({b for b in _bucket_dir_ids(spark, path, partition_col)
+                    if b >= num_buckets})
+    if stale:
+        raise _layout_error(
+            path, f"bucket ids {stale[:4]} are outside "
+            f"num_buckets={num_buckets}; num_buckets must stay constant "
+            "for a mart path")
 
 
 def write_mart(mart: DataFrame, path: str,
                partition_col: str | None = "SOURCE_ID",
                key: str = KEY,
-               num_buckets: int | None = 16,
+               num_buckets: int = 16,
                touched_keys: DataFrame | None = None,
                source_id: int | None = None,
                materialize_first: bool = False,
@@ -215,14 +228,13 @@ def write_mart(mart: DataFrame, path: str,
     SCD2 merge (expired + fresh rows all carry arriving keys), so
     skipping them is lossless. ``source_id`` additionally restricts the
     write to one feed's partitions (one feed never rewrites another).
-    ``num_buckets=None`` keeps the legacy SOURCE_ID-only layout.
     ``num_buckets`` must stay constant for a given mart path; size it so
     one bucket ≈ a few GB at the target scale (1024+ at 100 TB). A
-    pre-write layout probe enforces this: writing a bucketed layout
-    into a legacy mart, a legacy layout into a bucketed mart, or a
-    smaller ``num_buckets`` than the on-disk bucket ids raises
-    ValueError instead of silently mixing layouts (dynamic overwrite
-    would leave the old files in place and double rows on read).
+    pre-write layout probe (_check_mart_layout) enforces this: a
+    directory not in this layout, or on-disk bucket ids at or above
+    ``num_buckets``, raises ValueError instead of silently mixing
+    layouts (dynamic overwrite would leave the old files in place and
+    double rows on read).
     ``partition_col=None`` drops the source dimension (single-feed
     marts, e.g. a streaming user mart) — buckets alone partition.
     ``materialize_first`` persists + counts the outgoing rows before the
@@ -238,19 +250,15 @@ def write_mart(mart: DataFrame, path: str,
     spark = mart.sparkSession
     if check_layout:
         _check_mart_layout(spark, path, partition_col, num_buckets)
-    parts = [partition_col] if partition_col is not None else []
-    out = mart
-    if num_buckets is not None:
-        out = out.withColumn(MART_BUCKET_COL, mart_bucket(key, num_buckets))
-        parts.append(MART_BUCKET_COL)
-        if touched_keys is not None:
-            kcol = touched_keys.columns[0]
-            buckets = (touched_keys
-                       .select(F.pmod(F.xxhash64(F.col(kcol)),
-                                      F.lit(num_buckets)).cast("int")
-                                .alias(MART_BUCKET_COL))
-                       .distinct())
-            out = out.join(F.broadcast(buckets), MART_BUCKET_COL, "left_semi")
+    parts = ([partition_col] if partition_col is not None else []) \
+        + [MART_BUCKET_COL]
+    out = mart.withColumn(MART_BUCKET_COL, mart_bucket(key, num_buckets))
+    if touched_keys is not None:
+        buckets = (touched_keys
+                   .select(mart_bucket(touched_keys.columns[0], num_buckets)
+                           .alias(MART_BUCKET_COL))
+                   .distinct())
+        out = out.join(F.broadcast(buckets), MART_BUCKET_COL, "left_semi")
     if source_id is not None and partition_col is not None:
         out = out.filter(F.col(partition_col) == source_id)
     if materialize_first:
@@ -328,10 +336,10 @@ def read_mart_touched(spark, path: str, bucket_ids: list[int],
     no key has ever hashed to have no dir yet — absences simply don't
     match; when NO touched dir exists the full-path read (one listing)
     is used purely for the mart SCHEMA, with the bucket filter keeping
-    the scan itself empty. A mart with no bucket column AT ALL in that
-    fallback is a legacy un-bucketed layout — raise the same
-    documented rebuild error as the write-side guard, instead of
-    letting the filter die on an unresolvable MART_BUCKET column.
+    the scan itself empty. That fallback first runs the write-side
+    guard's layout check (_bucket_dir_ids), so a directory write_mart
+    did not lay out raises the same refusal instead of letting the
+    filter die on an unresolvable MART_BUCKET column.
 
     The BASE path is glob-escaped before embedding in the pattern (and
     the matched dirs re-escaped before the read — Spark's path
@@ -351,17 +359,11 @@ def read_mart_touched(spark, path: str, bucket_ids: list[int],
         return (reader.option("basePath", path)
                 .parquet(*[escape_glob(d) for d in dirs])
                 .drop(MART_BUCKET_COL))
-    # The no-touched-dir fallback reads the full path (for schema /
-    # the legacy-layout diagnostic) — same glob-expansion hazard as
-    # the pruned read above, so the path is escaped here too.
+    # The no-touched-dir fallback reads the full path for the schema —
+    # same glob-expansion hazard as the pruned read above, so the path
+    # is escaped here too.
+    _bucket_dir_ids(spark, path, partition_col)
     full = reader.parquet(escape_glob(path))
-    if MART_BUCKET_COL not in full.columns:
-        raise ValueError(
-            f"mart at {path} has a legacy un-bucketed layout; a "
-            "bucket-pruned read cannot prune it and a bucketed write "
-            "under dynamic overwrite would mix layouts. Rewrite the "
-            "mart once with the bucketed layout, or pass "
-            "num_buckets=None.")
     return (full.filter(F.col(MART_BUCKET_COL).isin(bucket_ids))
             .drop(MART_BUCKET_COL))
 
@@ -529,16 +531,13 @@ def _widened_footer_schema(spark, path: str, depth: int):
     from pyspark_etl_project_spark.operators.fs import (
         escape_glob, glob_dirs)
 
-    # depth=0 (unpartitioned mart): the root dir IS the leaf — no glob
-    # components, no relative names to filter ([-0:] would slice the
-    # WHOLE path and wrongly drop roots like /tmp/.cache/mart).
     leaf_dirs = [
         d for d in glob_dirs(spark, escape_glob(path) + "/*" * depth)
         # A glob * also matches _temporary/.staging dirs — exclude any
         # leaf whose relative components are non-data, same convention
         # as every Spark listing.
-        if depth == 0 or all(not c.startswith(("_", "."))
-                             for c in d.split("/")[-depth:])]
+        if all(not c.startswith(("_", "."))
+               for c in d.split("/")[-depth:])]
     if not leaf_dirs:
         raise ValueError(
             f"vacuum_mart_path: no partition dirs under {path} to probe")
@@ -607,27 +606,25 @@ def _widened_footer_schema(spark, path: str, depth: int):
     return T.StructType.fromDDL(", ".join(ddl_fields))
 
 
-def _vacuum_read(spark, path: str, partition_col: str | None,
-                 num_buckets: int | None) -> DataFrame:
-    """The vacuum pass's mart read. Partition values must round-trip
-    VERBATIM through the pass: with type inference on, a string
-    partition dir like 'SRC=0123' reads back as int 123, and the
-    rewrite would silently rename the partition to 'SRC=123' (and
-    merge '01' with '1'). Retention must never mutate values, so the
-    read pins an EXPLICIT schema — data columns probed from the MERGED
-    footers of all files, every partition-dir column as string. A
-    user-specified schema bypasses partition type inference PER-READ
-    (verified on 4.1: '0123' stays '0123', 'a%3Ab' unescapes to
-    'a:b', sentinel dirs read back NULL), so no session-global conf is
-    touched — a concurrent reader in the same SparkSession is
-    unaffected (the r11 interim fix toggled
-    partitionColumnTypeInference for the discovery window). It also
-    fixes the all-NULL mart (hypothesis-found, round 12): a mart whose
-    every dir is __HIVE_DEFAULT_PARTITION__ reads back as a VOID-typed
-    partition column under plain discovery, and the rewrite's
-    write.partitionBy refuses VOID — pinned to string, it round-trips.
+def _vacuum_schema(spark, path: str, part_cols: list):
+    """The pinned full read schema for the vacuum pass's mart reads:
+    data columns from the merged footers (or the widened fallback on a
+    type-evolved mix), every partition-dir column as string.
 
-    The schema probe MERGES every file's footer (recursiveFileLookup
+    Partition values must round-trip VERBATIM through the pass: with
+    type inference on, a string partition dir like 'SRC=0123' reads
+    back as int 123, and the rewrite would silently rename the
+    partition to 'SRC=123' (and merge '01' with '1'). A user-specified
+    schema bypasses partition type inference PER-READ (verified on
+    4.1: '0123' stays '0123', 'a%3Ab' unescapes to 'a:b', sentinel dirs
+    read back NULL), so no session-global conf is touched — a
+    concurrent reader in the same SparkSession is unaffected. It also
+    fixes the all-NULL mart: a mart whose every dir is
+    __HIVE_DEFAULT_PARTITION__ reads back as a VOID-typed partition
+    column under plain discovery, and the rewrite's write.partitionBy
+    refuses VOID — pinned to string, it round-trips.
+
+    The data columns MERGE every file's footer (recursiveFileLookup
     skips partition parsing, so it yields data columns only): a
     single-footer probe would silently DROP any column absent from the
     one probed file on a schema-evolved mart — the rewrite then
@@ -635,58 +632,21 @@ def _vacuum_read(spark, path: str, partition_col: str | None,
     reads are one distributed job over O(files) footers — linear, and
     the only correct basis for a destructive rewrite that must
     preserve every column. The retention predicate still pushes down
-    to the parquet scan (tests/test_scale.py pins PushedFilters on
-    this read).
+    to the parquet scan (tests/test_scale.py pins PushedFilters on a
+    read with this schema).
 
     TYPE-evolved marts (the same column int in load-1 files, long in
     load-2): Spark's mergeSchema probe REFUSES that mix
-    (CANNOT_MERGE_SCHEMAS — it never widens), so the read falls back
+    (CANNOT_MERGE_SCHEMAS — it never widens), so the probe falls back
     to _widened_footer_schema: one distributed footer pass computes
     the per-column type sets and pins each conflicted column to the
     smallest type the parquet reader itself can upcast every file to
     (verified on 4.1: integral chains, float→double,
     int-or-narrower→double). The rewrite then persists survivors in
-    the widened type — one vacuum HEALS the mart to a uniform schema.
-    A mix outside the verified lattice (string vs int,
+    the widened type — one vacuum HEALS the rewritten leaves to a
+    uniform schema. A mix outside the verified lattice (string vs int,
     bigint vs double, conflicting nested types) raises before any
     data moves."""
-    from pyspark.sql import types as T
-
-    from pyspark_etl_project_spark.operators.fs import escape_glob
-
-    part_cols = ([partition_col] if partition_col is not None else []) \
-        + ([MART_BUCKET_COL] if num_buckets is not None else [])
-    if not part_cols:
-        # UNPARTITIONED layout: no dir values to round-trip, but the
-        # schema hazards are identical — a plain read picks ONE footer
-        # and would silently drop a late-added column from the rewrite
-        # (the r12 bug class), and a type-evolved mix needs the same
-        # widening heal. mergeSchema covers the first; the footer-scan
-        # fallback (depth=0 probes the root dir itself) the second.
-        try:
-            df = (spark.read.option("mergeSchema", "true")
-                  .parquet(escape_glob(path)))
-        except Exception as exc:  # noqa: BLE001 — gate on the MERGE error
-            if "CANNOT_MERGE_SCHEMAS" not in str(exc):
-                raise
-            schema = _widened_footer_schema(spark, path, depth=0)
-            df = spark.read.schema(schema).parquet(escape_glob(path))
-        if MART_BUCKET_COL in df.columns:
-            df = df.drop(MART_BUCKET_COL)
-        return df
-
-    # Bucket col is layout, not data (read_mart's contract) —
-    # write_mart re-derives it from the key on the rewrite.
-    return (spark.read.schema(_vacuum_schema(spark, path, part_cols))
-            .parquet(escape_glob(path))
-            .drop(MART_BUCKET_COL))
-
-
-def _vacuum_schema(spark, path: str, part_cols: list):
-    """The pinned full read schema for a PARTITIONED mart's vacuum-side
-    reads: data columns from the merged footers (or the widened
-    fallback on a type-evolved mix), every partition-dir column as
-    string (verbatim round-trip — see _vacuum_read's contract)."""
     from pyspark.sql import types as T
 
     from pyspark_etl_project_spark.operators.fs import escape_glob
@@ -727,7 +687,7 @@ def _leaf_expiry_stats(full: DataFrame, part_cols: list) -> DataFrame:
 def vacuum_mart_path(spark, path: str, horizon_ts: str,
                      partition_col: str | None = None,
                      key: str = KEY,
-                     num_buckets: int | None = 16) -> None:
+                     num_buckets: int = 16) -> None:
     """ON-DISK retention maintenance for a persisted mart: apply
     vacuum_expired's predicate and rewrite the mart IN ITS OWN LAYOUT
     — the maintenance twin of compact_band_index for the SCD2 side.
@@ -782,7 +742,7 @@ def vacuum_mart_path(spark, path: str, horizon_ts: str,
             "is intended")
 
     part_cols = ([partition_col] if partition_col is not None else []) \
-        + ([MART_BUCKET_COL] if num_buckets is not None else [])
+        + [MART_BUCKET_COL]
     # The horizon is parsed by SPARK (same cast the filter uses), so
     # the driver-side stats compare cannot drift from the rewrite's
     # predicate semantics.
@@ -791,27 +751,6 @@ def vacuum_mart_path(spark, path: str, horizon_ts: str,
     if hz is None:
         raise ValueError(
             f"vacuum_mart_path: unparseable horizon {horizon_ts!r}")
-
-    if not part_cols:
-        # UNPARTITIONED layout: a single leaf. Stats decide no-op /
-        # refusal; otherwise it is a full-dir overwrite as before.
-        mart = _vacuum_read(spark, path, None, None)
-        st = mart.agg(F.min("END_DATE").alias("mn"),
-                      F.max("END_DATE").alias("mx"),
-                      F.max(F.col("END_DATE").isNull()).alias("nn")) \
-                 .first()
-        if st["mx"] is None or st["mx"] < hz:
-            raise refuse()
-        if not st["nn"] and st["mn"] is not None and st["mn"] >= hz:
-            return  # nothing to drop: leave the files byte-untouched
-        kept = (vacuum_expired(mart, horizon_ts)
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        try:
-            write_mart(kept, path, partition_col=None, key=key,
-                       num_buckets=None, materialize_first=True)
-        finally:
-            kept.unpersist()
-        return
 
     schema = _vacuum_schema(spark, path, part_cols)
     full = spark.read.schema(schema).parquet(escape_glob(path))

@@ -48,44 +48,13 @@ def save_watermark(spark, path: str, source: str, value: int) -> None:
     number of sources rather than a whole-table rewrite — at hundreds
     of thousands of feeds the table updates in constant time, and
     `read_watermark` prunes to one partition at file listing. The value
-    is only advanced after the corresponding load commits.
-
-    A table written by the pre-partitioned layout (flat files with a
-    `source` data column) is migrated in one pass on first save."""
-    legacy = _legacy_flat_rows(spark, path)
-    updates = {**legacy, source: value}
-    if legacy:
-        _delete_path(spark, path)  # one-time layout migration
+    is only advanced after the corresponding load commits."""
     from pyspark_etl_project_spark.functions.seedframe import seed_df
-    df = seed_df(spark, sorted(updates.items()), "source string, wm long")
+    df = seed_df(spark, [(source, value)], "source string, wm long")
     (df.coalesce(1).write.mode("overwrite")
        .option("partitionOverwriteMode", "dynamic")
        .partitionBy("source")
        .parquet(path))
-
-
-def _legacy_flat_rows(spark, path: str) -> dict:
-    """Rows of a pre-round-6 flat watermark table (parquet files at the
-    root with `source` as a data column), or {} if the path is absent or
-    already source-partitioned. Uses the Hadoop FS API, so it works on
-    HDFS/object stores, not just local paths."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return {}
-    flat = any(st.isFile() and st.getPath().getName().endswith(".parquet")
-               for st in fs.listStatus(hpath))
-    if not flat:
-        return {}
-    return {r["source"]: r["wm"]
-            for r in spark.read.parquet(path).collect()}
-
-
-def _delete_path(spark, path: str) -> None:
-    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
 
 
 def read_watermarks(spark, path: str) -> DataFrame:

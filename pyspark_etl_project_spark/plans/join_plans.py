@@ -106,8 +106,9 @@ def salted_skew_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- rollup aggregation (subtotals + grand total in one pass) -------------
 # Beyond-reference breadth: the reference has no grouping sets
-# (SURVEY.md §2.D note). Spark expands ROLLUP into one Expand + single
-# shuffle — subtotal layers do NOT rescan the fact table.
+# (SURVEY.md §2.D note). The fact table is scanned and aggregated once
+# at the finest level; the subtotal layers re-aggregate that tiny
+# intermediate and do NOT rescan the fact table.
 
 @_q("rollup_flag_status", """
 SELECT l_returnflag, l_linestatus,
@@ -127,8 +128,11 @@ def rollup_flag_status_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # GROUP BY ROLLUP — the oracle replays the native form. NULL
     # subtotal markers cannot collide with data: both columns are
     # non-null TPC-H flags (a rollup over nullable group keys would
-    # need grouping_id to stay unambiguous). Measured 1.15 -> 0.60 s
-    # median at sf0.1 (identical 10-row output).
+    # need grouping_id to stay unambiguous). Measured 1.50 -> 1.04 s
+    # median at sf0.1 (identical 10-row output). On an empty fact
+    # table the grand total is still one row, as in standard SQL and
+    # the DuckDB oracle: COUNT(*) of nothing is 0 (hence the coalesce),
+    # SUM of nothing stays NULL.
     li = load(spark, sf_dir, "lineitem")
     fine = (li.groupBy("l_returnflag", "l_linestatus")
               .agg(F.count(F.lit(1)).alias("_n"),
@@ -138,7 +142,8 @@ def rollup_flag_status_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def level(cols: list[str]) -> DataFrame:
         g = fine.groupBy(*cols) if cols else fine.groupBy()
-        out = g.agg(F.sum("_n").cast("long").alias("n_rows"),
+        out = g.agg(F.coalesce(F.sum("_n"), F.lit(0)).cast("long")
+                     .alias("n_rows"),
                     F.floor(F.sum("_q") * 100).cast("long")
                      .alias("qty_cents"))
         for c in ("l_returnflag", "l_linestatus"):

@@ -108,22 +108,13 @@ STREAM_HASH_COL = "SOURCE_HASH_KEY"
 # "canonical-sorted-v1" = this module's md5 over the SORTED value
 # columns; "caller" = the initial_mart carried its own SOURCE_HASH_KEY,
 # which this module cannot reconstruct — arrivals must then carry the
-# same caller-computed column. Marts predating the marker (or built
-# externally) have no file and fall back to the documented
-# trust-arrival-hash-if-present behavior. A SIBLING of the mart dir
-# (like the _chk checkpoint), not a file inside it: the unpartitioned
-# mart config full-overwrites the whole dir per merge batch, which
-# would delete an in-dir marker and silently drop the guard.
+# same caller-computed column. Externally built marts have no file and
+# fall back to the documented trust-arrival-hash-if-present behavior.
+# A SIBLING of the mart dir (like the _chk checkpoint), not a file
+# inside it: the mart dir holds only write_mart's partition dirs, and
+# its layout guard refuses any other visible entry there.
 HASH_PROVENANCE_CANONICAL = "canonical-sorted-v1"
 HASH_PROVENANCE_CALLER = "caller"
-
-# One code revision wrote the marker INSIDE the mart dir before the
-# sibling design landed. Those in-dir markers are correct provenance
-# records — dropping them on upgrade would silently revert an existing
-# mart to trust-arrival routing (re-opening the phantom-UPDATE /
-# missing-fail-fast bugs the marker prevents), so reads fall back to
-# this legacy location and migrate what they find to the sibling path.
-LEGACY_PROVENANCE_MARKER = "_FINGERPRINT_PROVENANCE"
 
 
 def provenance_marker_path(mart_path: str) -> str:
@@ -132,23 +123,10 @@ def provenance_marker_path(mart_path: str) -> str:
 
 def read_provenance(spark: SparkSession, mart_path: str) -> str | None:
     """The mart's fingerprint-provenance value, or None (no marker —
-    legacy or externally built mart). Prefers the sibling marker file;
-    falls back to the legacy in-dir location and MIGRATES a hit to the
-    sibling path immediately — an unpartitioned mart's next full
-    overwrite would delete the in-dir copy mid-run, flipping routing
-    to the trust-arrival fallback between two micro-batches."""
-    from pyspark_etl_project_spark.operators.fs import (read_text_marker,
-                                                        write_text_marker)
+    an externally built mart)."""
+    from pyspark_etl_project_spark.operators.fs import read_text_marker
 
-    sibling = provenance_marker_path(mart_path)
-    value = read_text_marker(spark, sibling)
-    if value is not None:
-        return value
-    legacy = mart_path.rstrip("/") + "/" + LEGACY_PROVENANCE_MARKER
-    value = read_text_marker(spark, legacy)
-    if value is not None:
-        write_text_marker(spark, sibling, value)
-    return value
+    return read_text_marker(spark, provenance_marker_path(mart_path))
 
 _SCD2_META_COLS = ("ACTIVE_FLAG", "START_DATE", "END_DATE")
 
@@ -182,10 +160,11 @@ def scd2_route_arrivals(arrivals: DataFrame, mart: DataFrame, key: str,
     byte-identical re-hashes across both paths. When the mart persists
     the fingerprint (``hash_col`` present — any mart this module
     seeded), the historic side reads just (key, hash, ACTIVE_FLAG): three
-    columns off the parquet scan. A legacy mart without the column gets
-    the fingerprint recomputed on the fly (reads all value columns once)
-    and keeps its legacy schema — mixing schemas under dynamic partition
-    overwrite would leave old-schema files in untouched buckets.
+    columns off the parquet scan. A mart without the column (built
+    outside this module) gets the fingerprint recomputed on the fly
+    (reads all value columns once) and keeps its schema — mixing
+    schemas under dynamic partition overwrite would leave old-schema
+    files in untouched buckets.
 
     Join shape: the batch is the SMALL side, the active mart slice the
     big one — so the historic slice is first semi-filtered to the
@@ -230,7 +209,7 @@ def scd2_route_arrivals(arrivals: DataFrame, mart: DataFrame, key: str,
     #    caller's hashes, so hash-less arrivals are a guaranteed
     #    permanent mismatch — fail fast instead of silently growing
     #    phantom versions on every retry.
-    # 4. No marker (legacy / externally built mart): the documented
+    # 4. No marker (externally built mart): the documented
     #    trust-arrival-hash-if-present fallback.
     if not has_hash or provenance == HASH_PROVENANCE_CANONICAL:
         arr = arrivals.withColumn(hash_col, fp)
@@ -254,13 +233,13 @@ def scd2_route_arrivals(arrivals: DataFrame, mart: DataFrame, key: str,
 
 
 # Sentinel: "read the mart's provenance marker yourself" — distinct
-# from None, which is a real provenance value (no marker / legacy).
+# from None, which is a real provenance value (no marker).
 _READ_MARKER = object()
 
 
 def scd2_merge_batch(spark: SparkSession, batch: DataFrame, mart_path: str,
                      run_ts: str, key: str, surrogate_col: str,
-                     prepare=None, num_buckets: int | None = 16,
+                     prepare=None, num_buckets: int = 16,
                      partition_col: str | None = None,
                      surrogate_offset: int | None = None,
                      hash_provenance=_READ_MARKER,
@@ -316,35 +295,28 @@ def scd2_merge_batch(spark: SparkSession, batch: DataFrame, mart_path: str,
         # INSERT on EVERY delivery and its predecessor could never be
         # expired, so each at-least-once retry stacks another identical
         # active row — fail loudly instead of corrupting silently.
-        bucket_col = (mart_bucket(key, num_buckets)
-                      if num_buckets is not None else F.lit(0))
         pre = arrivals.agg(
             F.max(F.col(key).isNull()).alias("has_null"),
-            F.collect_set(bucket_col).alias("bs")).first()
+            F.collect_set(mart_bucket(key, num_buckets)).alias("bs")).first()
         if pre["has_null"]:
             raise ValueError(
                 f"scd2_merge_batch: arrival batch contains NULL {key} "
                 "rows; a NULL natural key cannot participate in SCD2 "
                 "matching — filter or repair them in prepare()")
-        # Empty batch (collect_set over zero rows is [] in BOTH bucket
-        # configs — unbucketed marts collect a constant instead): skip
-        # even the mart read.
+        # Empty batch (collect_set over zero rows is []): skip even the
+        # mart read.
         if not pre["bs"]:
             return 0
-        if num_buckets is not None:
-            bucket_ids = list(pre["bs"])
-            # Read ONLY the touched bucket slice — listing stays
-            # O(touched buckets), layout-aware for partitioned marts
-            # (see read_mart_touched for the full plan rationale).
-            # merge_schema: this read FEEDS the bucket rewrite — on an
-            # evolved mart with touched buckets of differing vintage a
-            # single-footer read could drop a late-added column from
-            # every rewritten bucket. Footer merging stays O(touched).
-            mart = read_mart_touched(spark, mart_path, bucket_ids,
-                                     partition_col=partition_col,
-                                     merge_schema=True)
-        else:
-            mart = read_mart(spark, mart_path, merge_schema=True)
+        # Read ONLY the touched bucket slice — listing stays
+        # O(touched buckets), layout-aware for partitioned marts (see
+        # read_mart_touched for the full plan rationale). merge_schema:
+        # this read FEEDS the bucket rewrite — on an evolved mart with
+        # touched buckets of differing vintage a single-footer read
+        # could drop a late-added column from every rewritten bucket.
+        # Footer merging stays O(touched).
+        mart = read_mart_touched(spark, mart_path, list(pre["bs"]),
+                                 partition_col=partition_col,
+                                 merge_schema=True)
         # The partition column is NOT stored in the parquet files
         # (partitionBy strips it) — its read-back type comes from DIR
         # NAME inference. A numeric-looking STRING value ('0123')
@@ -380,9 +352,8 @@ def scd2_merge_batch(spark: SparkSession, batch: DataFrame, mart_path: str,
             if n_fresh == 0:
                 return 0
             if surrogate_offset is None:
-                full = (read_mart(spark, mart_path)
-                        if num_buckets is not None else mart)
-                surrogate_offset = _surrogate_offset(full, surrogate_col)
+                surrogate_offset = _surrogate_offset(
+                    read_mart(spark, mart_path), surrogate_col)
             pinned: list = []
             try:
                 merged = scd2_merge(mart, routed, run_ts=run_ts, key=key,
@@ -415,7 +386,7 @@ def foreach_batch_scd2(stream: DataFrame, mart_path: str, initial_mart: DataFram
                        run_ts: str, key: str = "SOURCE_SYSTEM_IDENTIFIER",
                        surrogate_col: str = "CSD_ID",
                        prepare=None,
-                       num_buckets: int | None = 16,
+                       num_buckets: int = 16,
                        partition_col: str | None = None,
                        reset: bool | None = None) -> None:
     """Merge each micro-batch into an SCD2 parquet mart. At-least-once
@@ -432,19 +403,17 @@ def foreach_batch_scd2(stream: DataFrame, mart_path: str, initial_mart: DataFram
     mart's SOURCE_HASH_KEY): the routing join then reads only
     (key, hash, ACTIVE_FLAG) from the active slice, not every value
     column. WHICH construction built the persisted hashes is recorded
-    at seed time in a provenance marker SIBLING to the mart dir (an
-    in-dir file would be deleted by the unpartitioned config's
-    full-dir overwrite; see read_provenance for the legacy in-dir
-    fallback), and every merge routes arrivals with the
-    matching one: a canonical-marked mart recomputes the canonical
-    fingerprint on arrivals even when prepare() emits its own
-    ``SOURCE_HASH_KEY`` (a foreign construction would never match and
-    every redelivery would phantom-UPDATE); a caller-marked mart
-    (``initial_mart`` carried the column) REQUIRES every arrival batch
-    to carry the same caller-computed hash and fails fast when one
-    doesn't. NULL natural keys are rejected at seed and per batch —
-    the (null-unsafe) key joins could never match them, so each retry
-    would stack another identical active row.
+    at seed time in a provenance marker SIBLING to the mart dir (the
+    mart dir holds only write_mart's partition dirs), and every merge
+    routes arrivals with the matching one: a canonical-marked mart
+    recomputes the canonical fingerprint on arrivals even when
+    prepare() emits its own ``SOURCE_HASH_KEY`` (a foreign construction
+    would never match and every redelivery would phantom-UPDATE); a
+    caller-marked mart (``initial_mart`` carried the column) REQUIRES
+    every arrival batch to carry the same caller-computed hash and
+    fails fast when one doesn't. NULL natural keys are rejected at
+    seed and per batch — the (null-unsafe) key joins could never match
+    them, so each retry would stack another identical active row.
 
     The mart lives in the bucketed layout (``write_mart``): each batch
     reads AND rewrites ONLY the (bucket) partitions its arriving keys
@@ -463,10 +432,10 @@ def foreach_batch_scd2(stream: DataFrame, mart_path: str, initial_mart: DataFram
 
     # Normalize ONCE so every sibling path derives from the same stem:
     # a trailing-slash mart_path would put the '_chk' checkpoint INSIDE
-    # the mart dir, where the unpartitioned config's full-dir overwrite
-    # deletes the running query's committed offsets mid-stream (the
-    # marker path rstrips internally, but the checkpoint concat and
-    # the prior-state probe must agree with it).
+    # the mart dir, mixing the running query's committed offsets into
+    # the mart's partition dirs (the marker path rstrips internally,
+    # but the checkpoint concat and the prior-state probe must agree
+    # with it).
     mart_path = mart_path.rstrip("/") or mart_path
     spark = stream.sparkSession
     # A fresh load clears BOTH the mart directory and the stream
@@ -556,13 +525,11 @@ def foreach_batch_scd2(stream: DataFrame, mart_path: str, initial_mart: DataFram
         # merge routes arrivals with the matching one — mixing
         # constructions would make every redelivered unchanged row
         # compare unequal and phantom-UPDATE, the exact bug routing
-        # exists to prevent. Sibling because an UNPARTITIONED mart
-        # config (num_buckets=None, partition_col=None) full-overwrites
-        # the mart dir on every merge batch, which would silently
-        # delete an in-dir marker. Written BEFORE the seed: a crash in
-        # between leaves a marker with no mart — resume then fails
+        # exists to prevent. Sibling because the mart dir holds only
+        # write_mart's partition dirs. Written BEFORE the seed: a crash
+        # in between leaves a marker with no mart — resume then fails
         # loudly (no mart to resume) instead of a marker-less mart
-        # silently falling back to legacy trust-arrival routing.
+        # silently falling back to trust-arrival routing.
         write_text_marker(spark, marker, provenance)
         write_mart(seed, mart_path, partition_col=partition_col,
                    key=key, num_buckets=num_buckets)
@@ -587,10 +554,7 @@ def foreach_batch_scd2(stream: DataFrame, mart_path: str, initial_mart: DataFram
     # Read the provenance marker ONCE per run, not per micro-batch —
     # it cannot change while this run owns the mart (only the seed
     # path writes it), and a py4j file read per batch is avoidable
-    # per-batch latency. read_provenance also migrates a legacy
-    # in-dir marker to the sibling path HERE, before the first merge's
-    # overwrite could delete it (the resume path skips seeding, so
-    # this is the only pre-merge hook a legacy mart passes through).
+    # per-batch latency.
     run_provenance = read_provenance(spark, mart_path)
 
     def merge_batch(batch: DataFrame, epoch_id: int) -> None:

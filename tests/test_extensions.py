@@ -335,6 +335,24 @@ def test_kmeans_refine_improves_clustering(spark):
         assert r["cell"] == max(sims, key=lambda c: (sims[c], -c))
 
 
+def test_ivf_cell_sql_path_escapes_backticks(spark):
+    """The column-NAME fast path quotes the name into parsed SQL; a
+    backtick inside the name must be doubled, so the SQL path parses
+    and assigns the same cells as the Column path."""
+    from pyspark_etl_project_spark.extensions.similarity import ivf_cell
+
+    quoted = "`em``b`"  # the column named em`b
+    emb = spark.createDataFrame(
+        [(i, [float(i % 3), float(i % 5), 1.0]) for i in range(12)],
+        f"vec_id long, {quoted} array<double>")
+    cents = [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]),
+             (2, [0.0, 0.0, 1.0])]
+    got = emb.select("vec_id", ivf_cell("em`b", cents).alias("a"),
+                     ivf_cell(F.col(quoted), cents).alias("b")).collect()
+    assert len(got) == 12
+    assert all(r["a"] == r["b"] for r in got), got
+
+
 def test_chunk_tokens_windows_and_overlap(spark):
     from pyspark_etl_project_spark.extensions.text import chunk_tokens
 

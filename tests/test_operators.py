@@ -315,8 +315,8 @@ def test_read_evolved_schema_merge(spark, tmp_path):
 
 def test_watermark_store_is_source_partitioned_and_migrates(spark, tmp_path):
     """A watermark advance must rewrite only that source's partition
-    (O(1) in the number of sources), prune the one-source read at file
-    listing, and transparently migrate a pre-partitioned flat table."""
+    (O(1) in the number of sources) and prune the one-source read at
+    file listing."""
     import os
     import re
 
@@ -327,11 +327,8 @@ def test_watermark_store_is_source_partitioned_and_migrates(spark, tmp_path):
     )
 
     p = str(tmp_path / "wm")
-    legacy = spark.createDataFrame([("csv", 100), ("xml", 7)],
-                                   "source string, wm long")
-    legacy.coalesce(1).write.mode("overwrite").parquet(p)
-
-    save_watermark(spark, p, "csv", 250)  # migrates layout + advances
+    save_watermark(spark, p, "xml", 7)
+    save_watermark(spark, p, "csv", 250)
     assert read_watermark(spark, p, "csv") == 250
     assert read_watermark(spark, p, "xml") == 7
     entries = os.listdir(p)

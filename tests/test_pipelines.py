@@ -1081,41 +1081,6 @@ def test_foreach_batch_scd2_bad_seed_preserves_prior_state(spark, tmp_path):
     assert after == before
 
 
-def test_marker_survives_unpartitioned_merge(spark, tmp_path):
-    """The provenance marker lives BESIDE the mart dir: the
-    unpartitioned mart config (num_buckets=None, partition_col=None)
-    full-overwrites the mart dir on every merge batch, which would
-    delete an in-dir marker and silently drop the caller-managed
-    fail-fast on resume."""
-    from pyspark_etl_project_spark.operators.fs import (read_text_marker,
-                                                        write_text_marker)
-    from pyspark_etl_project_spark.operators.scd2 import write_mart
-    from pyspark_etl_project_spark.streaming.ingest import (
-        HASH_PROVENANCE_CANONICAL, provenance_marker_path,
-        scd2_merge_batch)
-
-    mart_path = str(tmp_path / "mart")
-    write_mart(_mini_mart(spark, with_hash=True), mart_path,
-               partition_col=None, key="ssi", num_buckets=None)
-    write_text_marker(spark, provenance_marker_path(mart_path),
-                      HASH_PROVENANCE_CANONICAL)
-    batch = spark.createDataFrame([("K-1", 11)], "ssi string, v long")
-    n = scd2_merge_batch(spark, batch, mart_path,
-                         run_ts="2024-01-01 00:00:00", key="ssi",
-                         surrogate_col="csd_id", num_buckets=None,
-                         partition_col=None)
-    assert n == 1  # a real UPDATE merged and rewrote the whole dir
-    assert (read_text_marker(spark, provenance_marker_path(mart_path))
-            == HASH_PROVENANCE_CANONICAL)
-    # And the marker still routes: redelivering the merged value is a
-    # DUPLICATE no-op.
-    n2 = scd2_merge_batch(spark, batch, mart_path,
-                          run_ts="2024-02-01 00:00:00", key="ssi",
-                          surrogate_col="csd_id", num_buckets=None,
-                          partition_col=None)
-    assert n2 == 0
-
-
 def test_foreach_batch_scd2_checkpoint_only_hint(spark, tmp_path):
     """When only a stale checkpoint survives (mart dir gone), the
     refuse-path error must NOT advise reset=False — resume requires a
@@ -1137,48 +1102,10 @@ def test_foreach_batch_scd2_checkpoint_only_hint(spark, tmp_path):
     assert "reset=False" not in str(exc.value)
 
 
-def test_legacy_in_dir_marker_migrates_to_sibling(spark, tmp_path):
-    """One shipped revision wrote the provenance marker INSIDE the mart
-    dir before the sibling design landed. Upgrading must not orphan it
-    (a lost caller-managed marker silently reverts the mart to
-    trust-arrival routing): read_provenance falls back to the legacy
-    in-dir location, migrates the value to the sibling path, and the
-    caller fail-fast still fires through the default marker read."""
-    from pyspark_etl_project_spark.operators.fs import (read_text_marker,
-                                                        write_text_marker)
-    from pyspark_etl_project_spark.operators.scd2 import write_mart
-    from pyspark_etl_project_spark.streaming.ingest import (
-        HASH_PROVENANCE_CALLER, LEGACY_PROVENANCE_MARKER,
-        provenance_marker_path, read_provenance, scd2_merge_batch)
-
-    mart_path = str(tmp_path / "mart")
-    caller_seed = (_mini_mart(spark, with_hash=False)
-                   .withColumn("SOURCE_HASH_KEY",
-                               F.md5(F.col("v").cast("string"))))
-    write_mart(caller_seed, mart_path, partition_col=None, key="ssi",
-               num_buckets=4)
-    write_text_marker(spark, mart_path + "/" + LEGACY_PROVENANCE_MARKER,
-                      HASH_PROVENANCE_CALLER)
-    assert read_provenance(spark, mart_path) == HASH_PROVENANCE_CALLER
-    # Migrated: the sibling copy now exists, safe from full overwrites.
-    assert (read_text_marker(spark, provenance_marker_path(mart_path))
-            == HASH_PROVENANCE_CALLER)
-    # And the migrated provenance drives routing: hash-less arrivals
-    # against a caller-marked mart must fail fast, exactly as if the
-    # marker had been written at the sibling path from the start.
-    batch = spark.createDataFrame([("K-1", 10)], "ssi string, v long")
-    with pytest.raises(ValueError, match="caller-managed"):
-        scd2_merge_batch(spark, batch, mart_path,
-                         run_ts="2024-01-01 00:00:00", key="ssi",
-                         surrogate_col="csd_id", num_buckets=4,
-                         partition_col=None)
-
-
 def test_foreach_batch_scd2_trailing_slash_sibling_paths(spark, tmp_path):
     """A trailing-slash mart_path must not nest the checkpoint INSIDE
-    the mart dir — under the unpartitioned config every merge batch
-    full-overwrites the mart dir, which would delete the running
-    query's committed offsets mid-stream. Every sibling path (marker,
+    the mart dir, where the running query's committed offsets would
+    sit among the mart's partition dirs. Every sibling path (marker,
     _chk, prior-state probe) derives from one rstripped stem."""
     import os
 
@@ -1206,7 +1133,7 @@ def test_foreach_batch_scd2_trailing_slash_sibling_paths(spark, tmp_path):
     foreach_batch_scd2(stream, mart_path + "/", initial,
                        run_ts="2024-01-01 00:00:00", key="ssi",
                        surrogate_col="csd_id", prepare=prep,
-                       num_buckets=None, partition_col=None)
+                       num_buckets=4, partition_col=None)
     assert os.path.isdir(mart_path + "_chk")
     assert not os.path.exists(os.path.join(mart_path, "_chk"))
     assert read_mart(spark, mart_path).count() > 1
@@ -1251,13 +1178,12 @@ def test_band_index_foreign_bucket_suffix_raises_guard_message(spark, tmp_path):
 
 
 def test_bucket_pruned_read_names_legacy_layout(spark, tmp_path):
-    """A bucketed merge pointed at a legacy UN-bucketed mart must raise
-    the documented rebuild error, not an unresolved-MART_BUCKET
+    """A merge pointed at a plain parquet dir (no MART_BUCKET dirs)
+    must raise the layout refusal, not an unresolved-MART_BUCKET
     AnalysisException from the fallback read's filter."""
     import pytest
 
-    from pyspark_etl_project_spark.operators.scd2 import (
-        read_mart_touched, write_mart)
+    from pyspark_etl_project_spark.operators.scd2 import read_mart_touched
     from pyspark_etl_project_spark.streaming.ingest import scd2_merge_batch
 
     t0 = "2020-01-01 00:00:00"
@@ -1268,14 +1194,13 @@ def test_bucket_pruned_read_names_legacy_layout(spark, tmp_path):
         .withColumn("START_DATE", F.col("START_DATE").cast("timestamp")) \
         .withColumn("END_DATE", F.col("END_DATE").cast("timestamp"))
     mart_path = str(tmp_path / "mart")
-    write_mart(mart, mart_path, partition_col=None, key="ssi",
-               num_buckets=None)
+    mart.write.parquet(mart_path)
 
-    with pytest.raises(ValueError, match="legacy un-bucketed layout"):
+    with pytest.raises(ValueError, match="not in the bucketed mart layout"):
         read_mart_touched(spark, mart_path, [0, 1])
 
     batch = spark.createDataFrame([("K-2", 20)], "ssi string, v long")
-    with pytest.raises(ValueError, match="legacy un-bucketed layout"):
+    with pytest.raises(ValueError, match="expected MART_BUCKET=<id> dirs"):
         scd2_merge_batch(spark, batch, mart_path,
                          run_ts="2024-01-01 00:00:00", key="ssi",
                          surrogate_col="csd_id", num_buckets=16,
@@ -1326,7 +1251,7 @@ def test_check_mart_layout_ignores_dotfiles(spark, tmp_path):
     """'.'-prefixed strays in the mart dir (.DS_Store, editor temps)
     follow the same hidden-entry convention as '_' sidecars — the
     layout probe must not classify them as data and raise the
-    legacy-layout refusal on a perfectly valid mart."""
+    layout refusal on a perfectly valid mart."""
     from pyspark_etl_project_spark.operators.scd2 import (
         _check_mart_layout, write_mart)
 
@@ -1477,12 +1402,11 @@ def test_band_index_glob_metachar_path(spark, tmp_path):
 
 
 def test_read_mart_touched_metachar_legacy_fallback(spark, tmp_path):
-    """The no-touched-dir fallback read must also survive a glob-
-    metachar mart path: a legacy un-bucketed mart under such a path
-    must raise the documented rebuild error (reached only if the
-    fallback read itself resolves the literal path), and a bucketed
-    mart whose touched buckets have no dirs yet must return the empty
-    slice rather than PATH_NOT_FOUND."""
+    """The no-touched-dir fallback must also survive a glob-metachar
+    mart path: a plain parquet dir under such a path must raise the
+    layout refusal (reached only if the fallback resolves the literal
+    path), and a bucketed mart whose touched buckets have no dirs yet
+    must return the empty slice rather than PATH_NOT_FOUND."""
     import pytest
 
     from pyspark_etl_project_spark.operators.scd2 import (
@@ -1490,11 +1414,10 @@ def test_read_mart_touched_metachar_legacy_fallback(spark, tmp_path):
 
     mart = spark.createDataFrame([(1, "K-1", 10)],
                                  "csd_id long, ssi string, v long")
-    legacy_path = str(tmp_path / "m[x]" / "legacy")
-    write_mart(mart, legacy_path, partition_col=None, key="ssi",
-               num_buckets=None)
-    with pytest.raises(ValueError, match="legacy un-bucketed layout"):
-        read_mart_touched(spark, legacy_path, [0, 1])
+    foreign_path = str(tmp_path / "m[x]" / "foreign")
+    mart.write.parquet(foreign_path)
+    with pytest.raises(ValueError, match="not in the bucketed mart layout"):
+        read_mart_touched(spark, foreign_path, [0, 1])
 
     bucketed_path = str(tmp_path / "m[x]" / "bucketed")
     write_mart(mart, bucketed_path, partition_col=None, key="ssi",
@@ -1817,76 +1740,6 @@ def test_vacuum_mart_path_prunes_clean_leaves(spark, tmp_path):
     assert sorted((p, os.path.getmtime(p)) for p in
                   _glob.glob(path + "/**/*.parquet",
                              recursive=True)) == all_before
-
-
-def test_vacuum_mart_path_unpartitioned_schema_evolution(spark, tmp_path):
-    """The UNPARTITIONED layout (partition_col=None, num_buckets=None)
-    has the same two schema-evolution hazards as the partitioned one,
-    previously unguarded: a plain read picks ONE footer, so the
-    full-dir overwrite would silently DELETE a late-added column
-    (round-13-found, same class as the r12 partitioned fix), and a
-    type-widened mix needs the same heal. One mart exercises both: an
-    old-schema file (csd_id int, no NEW_COL) plus a new-schema file
-    (csd_id long above 2^31, NEW_COL)."""
-    from pyspark_etl_project_spark.operators.scd2 import vacuum_mart_path
-
-    def hist(rows, schema):
-        return (spark.createDataFrame(rows, schema)
-                .withColumn("START_DATE",
-                            F.lit("2020-01-01 00:00:00").cast("timestamp"))
-                .withColumn("END_DATE",
-                            F.col("END_DATE").cast("timestamp")))
-
-    path = str(tmp_path / "mart")
-    # Written as plain appends — how an unpartitioned mart accumulates.
-    hist([(1, "K-1", "2020-06-01 00:00:00"),
-          (2, "K-2", "2099-12-31 00:00:00")],
-         "csd_id int, ssi string, END_DATE string") \
-        .coalesce(1).write.mode("append").parquet(path)
-    hist([(2 ** 40, "K-3", "n3", "2099-12-31 00:00:00")],
-         "csd_id long, ssi string, NEW_COL string, END_DATE string") \
-        .coalesce(1).write.mode("append").parquet(path)
-
-    vacuum_mart_path(spark, path, "2023-01-01 00:00:00",
-                     partition_col=None, key="ssi", num_buckets=None)
-    back = spark.read.parquet(path)  # healed: plain read sees it all
-    assert dict(back.dtypes)["csd_id"] == "bigint"
-    assert "NEW_COL" in back.columns
-    assert {(r["csd_id"], r["NEW_COL"]) for r in
-            back.select("csd_id", "NEW_COL").collect()} \
-        == {(2, None), (2 ** 40, "n3")}
-
-
-def test_vacuum_mart_path_unpartitioned_preserves_added_column(
-        spark, tmp_path):
-    """Column-added evolution WITHOUT a type conflict on the
-    unpartitioned layout — the mergeSchema (non-fallback) arm. A
-    plain single-footer read would drop NEW_COL from the full-dir
-    overwrite; the vacuum read must carry the column union."""
-    from pyspark_etl_project_spark.operators.scd2 import vacuum_mart_path
-
-    def hist(rows, schema):
-        return (spark.createDataFrame(rows, schema)
-                .withColumn("START_DATE",
-                            F.lit("2020-01-01 00:00:00").cast("timestamp"))
-                .withColumn("END_DATE",
-                            F.col("END_DATE").cast("timestamp")))
-
-    path = str(tmp_path / "mart")
-    hist([(1, "K-1", "2020-06-01 00:00:00"),
-          (2, "K-2", "2099-12-31 00:00:00")],
-         "csd_id long, ssi string, END_DATE string") \
-        .coalesce(1).write.mode("append").parquet(path)
-    hist([(3, "K-3", "n3", "2099-12-31 00:00:00")],
-         "csd_id long, ssi string, NEW_COL string, END_DATE string") \
-        .coalesce(1).write.mode("append").parquet(path)
-
-    vacuum_mart_path(spark, path, "2023-01-01 00:00:00",
-                     partition_col=None, key="ssi", num_buckets=None)
-    back = (spark.read.option("mergeSchema", "true").parquet(path)
-            .select("csd_id", "NEW_COL").collect())
-    assert {(r["csd_id"], r["NEW_COL"]) for r in back} \
-        == {(2, None), (3, "n3")}
 
 
 def test_vacuum_mart_path_escaped_values_and_empty_refusal(spark, tmp_path):

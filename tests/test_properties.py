@@ -830,7 +830,8 @@ def test_vacuum_heal_matches_model(spark, rows):
     import pytest
 
     from pyspark_etl_project_spark.operators.scd2 import (
-        _vacuum_read, mart_bucket, vacuum_mart_path, write_mart)
+        MART_BUCKET_COL, _vacuum_schema, mart_bucket, vacuum_mart_path,
+        write_mart)
 
     HORIZON = "2023-01-01 00:00:00"
     EXPIRED, OPEN = "2020-06-01 00:00:00", "2099-12-31 00:00:00"
@@ -883,8 +884,9 @@ def test_vacuum_heal_matches_model(spark, rows):
             return
         vacuum_mart_path(spark, path, HORIZON, partition_col="seg",
                          key="ssi", num_buckets=4)
+        schema = _vacuum_schema(spark, path, ["seg", MART_BUCKET_COL])
         back = {(int(r["csd_id"]), r["ssi"], r["seg"]) for r in
-                _vacuum_read(spark, path, "seg", 4)
+                spark.read.schema(schema).parquet(path)
                 .select("csd_id", "ssi", "seg").collect()}
         assert back == survivors
     finally:

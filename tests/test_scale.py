@@ -92,19 +92,20 @@ def test_mart_write_is_dynamic_partition_overwrite(spark, tmp_path):
     from pyspark_etl_project_spark.operators.scd2 import read_mart, write_mart
 
     path = str(tmp_path / "mart")
-    both = spark.createDataFrame(
-        [(1, 1, "a"), (2, 2, "b")], "CSD_ID long, SOURCE_ID int, v string")
-    write_mart(both, path, num_buckets=None)
+    schema = ("CSD_ID long, SOURCE_ID int, SOURCE_SYSTEM_IDENTIFIER string, "
+              "v string")
+    both = spark.createDataFrame([(1, 1, "k", "a"), (2, 2, "k", "b")], schema)
+    write_mart(both, path, num_buckets=4)
 
     def mtimes(sid):
         d = os.path.join(path, f"SOURCE_ID={sid}")
-        return {f: os.path.getmtime(os.path.join(d, f))
-                for f in os.listdir(d) if f.endswith(".parquet")}
+        return {os.path.join(r, f): os.path.getmtime(os.path.join(r, f))
+                for r, _dirs, files in os.walk(d)
+                for f in files if f.endswith(".parquet")}
 
     before_s1, before_s2 = mtimes(1), mtimes(2)
-    only_s1 = spark.createDataFrame([(3, 1, "a2")],
-                                    "CSD_ID long, SOURCE_ID int, v string")
-    write_mart(only_s1, path, num_buckets=None)
+    only_s1 = spark.createDataFrame([(3, 1, "k", "a2")], schema)
+    write_mart(only_s1, path, num_buckets=4)
     assert mtimes(2) == before_s2          # source 2 files untouched
     assert mtimes(1) != before_s1          # source 1 partition replaced
     rows = {(r["CSD_ID"], r["SOURCE_ID"], r["v"])
@@ -168,9 +169,11 @@ def test_mart_bucketed_write_prunes_untouched_buckets(spark, tmp_path):
 
 def test_mart_write_rejects_layout_mismatch(spark, tmp_path):
     """Dynamic overwrite never deletes partitions the incoming frame
-    doesn't produce, so a bucketed write into a legacy SOURCE_ID-only
-    mart (or the reverse, or a changed num_buckets) would duplicate
-    rows on read. write_mart must refuse instead of mixing layouts."""
+    doesn't produce, so writing into a directory another writer laid
+    out (plain files, missing partition dirs, or a changed
+    num_buckets) would duplicate rows on read. write_mart must refuse
+    instead of mixing layouts. Each foreign directory is written
+    without write_mart."""
     import pytest
 
     from pyspark_etl_project_spark.operators.scd2 import read_mart, write_mart
@@ -180,15 +183,30 @@ def test_mart_write_rejects_layout_mismatch(spark, tmp_path):
     rows = [(i, 1, f"k{i}", "v0") for i in range(10)]
     df = spark.createDataFrame(rows, schema)
 
-    legacy = str(tmp_path / "legacy")
-    write_mart(df, legacy, num_buckets=None)
-    with pytest.raises(ValueError, match="legacy un-bucketed layout"):
-        write_mart(df, legacy, num_buckets=8)
+    # Foreign dir: plain parquet files where MART_BUCKET dirs belong.
+    plain = str(tmp_path / "plain")
+    df.write.parquet(plain)
+    with pytest.raises(ValueError, match="expected MART_BUCKET=<id> dirs"):
+        write_mart(df, plain, partition_col=None, num_buckets=8)
+    # Missing partition dirs: the same files where SOURCE_ID dirs belong.
+    with pytest.raises(ValueError, match="expected SOURCE_ID=<value> dirs"):
+        write_mart(df, plain, num_buckets=8)
+    # Partition dirs holding files instead of bucket dirs.
+    by_source = str(tmp_path / "by_source")
+    df.write.partitionBy("SOURCE_ID").parquet(by_source)
+    with pytest.raises(ValueError, match="expected MART_BUCKET=<id> dirs"):
+        write_mart(df, by_source, num_buckets=8)
+    # Bucket ids at or above num_buckets.
+    wide = str(tmp_path / "wide")
+    (df.withColumn("MART_BUCKET", F.lit(9))
+       .write.partitionBy("SOURCE_ID", "MART_BUCKET").parquet(wide))
+    with pytest.raises(ValueError, match="num_buckets must stay constant"):
+        write_mart(df, wide, num_buckets=8)
 
     bucketed = str(tmp_path / "bucketed")
     write_mart(df, bucketed, num_buckets=8)
-    with pytest.raises(ValueError, match="bucket-partitioned"):
-        write_mart(df, bucketed, num_buckets=None)
+    with pytest.raises(ValueError, match="expected MART_BUCKET=<id> dirs"):
+        write_mart(df, bucketed, partition_col=None, num_buckets=8)
     with pytest.raises(ValueError, match="num_buckets must stay constant"):
         write_mart(df, bucketed, num_buckets=4)
 
@@ -480,7 +498,7 @@ def test_vacuum_pinned_read_pushes_filter_and_keeps_strings(spark, tmp_path):
     come back as verbatim STRINGS (numeric-looking dirs like SRC=0123
     must not re-type)."""
     from pyspark_etl_project_spark.operators.scd2 import (
-        _vacuum_read, vacuum_expired, write_mart)
+        MART_BUCKET_COL, _vacuum_schema, vacuum_expired, write_mart)
 
     mart = spark.createDataFrame(
         [(1, "K-1", "0123", "2020-06-01 00:00:00"),
@@ -491,7 +509,9 @@ def test_vacuum_pinned_read_pushes_filter_and_keeps_strings(spark, tmp_path):
     write_mart(mart, path, partition_col="SOURCE", key="ssi",
                num_buckets=4)
 
-    r = _vacuum_read(spark, path, "SOURCE", 4)
+    r = (spark.read
+         .schema(_vacuum_schema(spark, path, ["SOURCE", MART_BUCKET_COL]))
+         .parquet(path).drop(MART_BUCKET_COL))
     assert dict(r.dtypes)["SOURCE"] == "string"
     assert {row["SOURCE"] for row in r.select("SOURCE").collect()} \
         == {"0123", "7"}
@@ -536,11 +556,15 @@ def test_vacuum_stats_scan_reads_only_end_date(spark, tmp_path):
 
 
 def test_cross_source_overlap_hash_join_never_sortmerge(spark):
-    """The fingerprint self-join is hinted shuffle_hash: both sides are
-    large and already keyed on the fingerprint, so the plan must use a
-    ShuffledHashJoin (no sort passes) and broadcast the tiny per-source
-    totals — SortMergeJoin on the fp or a nested loop would resurrect
-    the sort/cartesian cost the operator is shaped to avoid."""
+    """The overlap matrix is derived from ONE per-fingerprint source set
+    (pairs are exploded from it — no self-join), so the only joins left
+    are the two broadcast attaches of the tiny per-source totals (one
+    keyed on source_a, one on source_b). A SortMergeJoin, a nested loop
+    or a cartesian would resurrect the sort/cartesian cost the operator
+    is shaped to avoid. (The Exchange count is pinned in
+    test_cohort_pins.py.)"""
+    import re
+
     from pyspark_etl_project_spark.extensions.dedup import cross_source_overlap
     from pyspark_etl_project_spark.plans.tables import load
 
@@ -548,10 +572,14 @@ def test_cross_source_overlap_hash_join_never_sortmerge(spark):
         "doc_id", "text", "source")
     plan = _formatted_plan(cross_source_overlap(docs, "doc_id", "text",
                                                 "source"))
-    assert "ShuffledHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
+    nodes = _nodes(plan)
+    for bad in ("SortMergeJoin", "CartesianProduct",
+                "BroadcastNestedLoopJoin"):
+        assert bad not in nodes, plan
+    assert [n for n in nodes if n.endswith("Join")] \
+        == ["BroadcastHashJoin"] * 2, plan
+    assert sorted(re.findall(r"Left keys \[1\]: \[(source_[ab])#", plan)) \
+        == ["source_a", "source_b"], plan
 
 
 def test_triangle_count_never_plans_a_cartesian(spark):
@@ -779,6 +807,27 @@ def test_multi_distinct_and_rollup_are_single_scan_expand(spark):
                      "Project", "AdaptiveSparkPlan", "ResultQueryStage",
                      "ShuffleQueryStage", "AQEShuffleRead")
                for n in nodes), nodes
+
+
+def test_rollup_flag_status_empty_lineitem_matches_native(spark, tmp_path):
+    """On an empty lineitem the Expand-free rollup must return what the
+    native GROUP BY ROLLUP of its DuckDB oracle returns: one grand-total
+    row whose COUNT(*) is 0 (not NULL) and whose SUM stays NULL."""
+    import duckdb
+
+    from pyspark_etl_project_spark.plans.join_plans import ORACLE
+    from pyspark_etl_project_spark.plans.join_plans import QUERIES as JQ
+
+    sf = str(tmp_path)
+    spark.read.parquet(SF_SMALL + "/lineitem.parquet").limit(0) \
+        .write.parquet(sf + "/lineitem.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW lineitem AS SELECT * FROM "
+                f"'{sf}/lineitem.parquet/*.parquet'")
+    want = con.execute(ORACLE["rollup_flag_status"]).fetchall()
+    got = JQ["rollup_flag_status"](spark, sf).collect()
+    assert want == [(None, None, 0, None)]
+    assert [tuple(r) for r in got] == want
 
 
 def test_variant_extract_reads_only_type_and_props(spark):
