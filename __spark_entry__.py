@@ -7,13 +7,15 @@ oracle_sql()  -> {name: DuckDB SQL twin} for the correctness gate
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-if "/root/repo" not in sys.path:
-    sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+if _ROOT not in sys.path:
+    sys.path.insert(0, _ROOT)
 
 from pyspark_etl_project_spark.plans import all_oracle_sql, all_queries  # noqa: E402
 

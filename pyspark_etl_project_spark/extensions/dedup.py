@@ -5,9 +5,17 @@ identity at corpus scale.
 Scale design:
 - Exact dedup: hash-groupBy (one shuffle on the 32-char digest, salted
   automatically by AQE if a boilerplate doc dominates).
-- MinHash-LSH: shingle→signature is a per-row map (no shuffle);
-  candidate generation shuffles on (band_id, band_hash) buckets only —
-  never the full cross join; verification joins only candidate pairs.
+- MinHash-LSH: shingle→signature→band is ONE per-row Arrow stage
+  (_banded_batches; no shuffle) that every MinHash caller shares —
+  banded_frame for candidate generation and the streaming band index,
+  minhash_calibration for the per-doc shingles and signature it
+  scores. Candidate generation shuffles on (band_id, band_hash)
+  buckets only — never the full cross join; verification joins only
+  candidate pairs.
+- Both Arrow stages (the gram stage and the banding stage) tokenize
+  with one helper (_java_tokens) and emit through one bounded flush
+  (_flushed_batches): worker memory is bounded by _ARROW_FLUSH_ROWS
+  output rows, not by document length × docs per batch.
 - SimHash: per-row signature, near-dup = same signature bucket (or
   Hamming probing by re-bucketing on signature halves).
 - All hashes are md5-derived (stable across engines/runs — no
@@ -18,6 +26,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+from itertools import islice
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -28,67 +37,94 @@ from pyspark.sql import functions as F
 #: tokenization from the JVM/oracle definition.
 _JAVA_WS = re.compile(r"[ \t\n\x0B\f\r]+")
 
+#: Output rows an Arrow stage holds before it yields a RecordBatch.
+#: One document can expand to a row per k-gram window, so without a
+#: fixed cut a single long document (or a batch of them) would be
+#: buffered whole in the Python worker.
+_ARROW_FLUSH_ROWS = 8192
+
+
+def _java_tokens(txt: str) -> list[str]:
+    """extensions.text.tokens in Python: trim ASCII spaces, split on
+    Java \\s, drop empties."""
+    s = txt.strip(" ")
+    return [t for t in _JAVA_WS.split(s) if t != ""] if s else []
+
+
+def _flushed_batches(batches, doc_rows, fields):
+    """Drive an Arrow stage: ``doc_rows(id, text)`` yields one output
+    tuple per row (id first) and the rows are yielded as RecordBatches
+    of at most _ARROW_FLUSH_ROWS rows — mid-document if need be, so
+    worker memory stays bounded by the constant. ``fields`` is the
+    (name, arrow type) list of the columns after the id, which keeps
+    its input name and type. Input columns arrive by POSITION: 0=id,
+    1=text."""
+    import pyarrow as pa
+
+    buf: list[tuple] = []
+    names = types = None
+
+    def flush():
+        cols = zip(*buf)
+        out = pa.RecordBatch.from_arrays(
+            [pa.array(c, t) for c, t in zip(cols, types)], names=names)
+        buf.clear()
+        return out
+
+    for batch in batches:
+        ids = batch.column(0)
+        names = [batch.schema.names[0]] + [n for n, _ in fields]
+        types = [ids.type] + [t for _, t in fields]
+        for did, txt in zip(ids.to_pylist(), batch.column(1).to_pylist()):
+            rows = doc_rows(did, txt)
+            # extend(islice) drains the doc's rows at C speed, stopping
+            # at the bound.
+            buf.extend(islice(rows, _ARROW_FLUSH_ROWS - len(buf)))
+            while len(buf) == _ARROW_FLUSH_ROWS:
+                yield flush()
+                buf.extend(islice(rows, _ARROW_FLUSH_ROWS))
+    if buf:
+        yield flush()
+
 
 def _gram_hash_batches(k: int, with_n: bool):
     """mapInArrow stage replicating the JVM gram pipeline bit-for-bit:
-    tokens (trim ASCII spaces, split on Java \\s, drop empties) →
-    k-gram windows joined by ' ' → md5 hex. Emits (id, [_n,] _start,
-    _gh) per window. Python hashlib.md5 over UTF-8 bytes is the same
-    function as Spark's md5 over UTF8String bytes, so the hashes are
-    identical (verified row-for-row at all three SFs).
+    tokens → k-gram windows joined by ' ' → md5 hex. Emits (id, [_n,]
+    _start, _gh) per window. Python hashlib.md5 over UTF-8 bytes is
+    the same function as Spark's md5 over UTF8String bytes, so the
+    hashes are identical (verified row-for-row at all three SFs).
 
     Why Python wins here (guide §4.2): the JVM path is an interpreted
     zip_with/slice/concat higher-order chain plus per-row md5 codegen;
     the Arrow path amortizes one C md5 per window with no expression
     interpretation. In-session A/B at sf0.1: 0.92 s → 0.62 s for the
-    gram stage alone. Columns arrive by POSITION: 0=id, 1=text.
+    gram stage alone.
 
     ``with_n=True`` additionally emits ONE header row per document
     (_start = -1, _gh = null, _n = token count) — every document, even
     those too short for a single window — so one text pass serves both
     the gram stream and the per-doc token counts a stats consumer
     joins back on."""
+    def doc_rows(did, txt):
+        if txt is None:
+            # JVM parity: size(tokens(NULL)) is NULL, and NULL text
+            # yields no gram rows (posexplode of NULL).
+            if with_n:
+                yield (did, None, -1, None)
+            return
+        w = _java_tokens(txt)
+        n = len(w)
+        if with_n:
+            yield (did, n, -1, None)
+        for i in range(n - k + 1):
+            gh = hashlib.md5(" ".join(w[i:i + k]).encode()).hexdigest()
+            yield (did, n, i, gh) if with_n else (did, i, gh)
+
     def fn(batches):
         import pyarrow as pa
-        for batch in batches:
-            ids = batch.column(0)
-            id_type = ids.type
-            out_id, out_n, out_start, out_gh = [], [], [], []
-            for did, txt in zip(ids.to_pylist(),
-                                batch.column(1).to_pylist()):
-                if txt is None:
-                    # JVM parity: size(tokens(NULL)) is NULL, and NULL
-                    # text yields no gram rows (posexplode of NULL).
-                    if with_n:
-                        out_id.append(did)
-                        out_n.append(None)
-                        out_start.append(-1)
-                        out_gh.append(None)
-                    continue
-                s = txt.strip(" ")
-                w = [t for t in _JAVA_WS.split(s) if t != ""] if s else []
-                n = len(w)
-                if with_n:
-                    out_id.append(did)
-                    out_n.append(n)
-                    out_start.append(-1)
-                    out_gh.append(None)
-                for i in range(n - k + 1):
-                    out_id.append(did)
-                    if with_n:
-                        out_n.append(n)
-                    out_start.append(i)
-                    out_gh.append(hashlib.md5(
-                        " ".join(w[i:i + k]).encode()).hexdigest())
-            arrays = [pa.array(out_id, id_type)]
-            names = [batch.schema.names[0]]
-            if with_n:
-                arrays.append(pa.array(out_n, pa.int32()))
-                names.append("_n")
-            arrays += [pa.array(out_start, pa.int32()),
-                       pa.array(out_gh, pa.string())]
-            names += ["_start", "_gh"]
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+        fields = ([("_n", pa.int32())] if with_n else []) + [
+            ("_start", pa.int32()), ("_gh", pa.string())]
+        yield from _flushed_batches(batches, doc_rows, fields)
     return fn
 
 
@@ -120,114 +156,93 @@ def word_shingles(col: Column | str, n: int = 3) -> Column:
     return F.array_distinct(ngram_array(tokens(col), n))
 
 
-def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
-    """MinHash signature: for seed k, min over md5(k||shingle) (string
-    order). Min over a pseudo-random permutation of the shingle universe —
-    the classic MinHash estimator, built from engine-portable md5.
-
-    Returns array<string> of length num_hashes (empty-shingle docs get
-    nulls)."""
-    def hasher(k: int):
-        # NB: must close over k via a factory — a `lambda s, k=k:` two-arg
-        # lambda is treated by F.transform as the (element, index) variant
-        # and k silently becomes the array index.
-        prefix = F.lit(f"{k}|")
-        return lambda s: F.md5(F.concat(prefix, s))
-
-    return F.array(*[
-        F.array_min(F.transform(shingles, hasher(k)))
-        for k in range(num_hashes)
-    ])
-
-
-def lsh_bands(signature: Column, num_bands: int, rows_per_band: int) -> Column:
-    """Band the signature: array of (band_id, band_hash) structs; docs
-    sharing any band bucket are near-dup candidates."""
-    bands = []
-    for b in range(num_bands):
-        piece = F.slice(signature, b * rows_per_band + 1, rows_per_band)
-        bands.append(F.struct(F.lit(b).alias("band_id"),
-                              F.md5(F.concat_ws("|", piece)).alias("band_hash")))
-    return F.array(*bands)
-
-
 def _banded_batches(num_hashes: int, num_bands: int, rows_per_band: int,
-                    shingle_n: int):
-    """mapInArrow stage replicating the shingle→minhash→band chain
-    bit-for-bit: tokens (trim ASCII spaces, split on Java \\s, drop
-    empties) → distinct ``shingle_n``-gram shingles joined by ' ' →
-    per seed k, min over md5('k|'||shingle) hex (Python str min ==
-    UTF8String binary compare on ASCII hex) → per band, md5 of the
-    '|'-joined signature slice. Docs with no shingles (NULL/short
-    text) emit nothing — the JVM chain's size(_sh) > 0 filter.
+                    shingle_n: int, with_sig: bool):
+    """mapInArrow MinHash stage — the engine's one shingle→signature→band
+    implementation: tokens → distinct ``shingle_n``-gram shingles
+    joined by ' ' (first-occurrence order, as array_distinct over
+    word_shingles) → per seed k, min over md5('k|'||shingle) hex
+    (Python str min == UTF8String binary compare on ASCII hex) → per
+    band, md5 of the '|'-joined signature slice. Docs with no shingles
+    (NULL/short text) emit nothing. Emits (id, band_id, band_hash) per
+    band.
 
-    Why Python wins here (guide §4.2): the JVM path interprets a
-    transform-lambda md5 per (seed × shingle) — 8 closures walked per
-    row — and showed multi-second GC spikes in the interleaved A/B
-    (6.7 s worst rep vs Arrow's 1.2 s); the Arrow path is one C md5
-    per (seed × distinct shingle) with no expression interpretation
-    (median 0.69 → 0.52 s on the sf0.1 stream slice, identical
-    18,800-row output). Columns arrive by POSITION: 0=id, 1=text."""
+    ``with_sig=True`` additionally emits ONE header row per emitted
+    document ahead of its bands (band_id = -1, band_hash = null) that
+    carries the doc's shingles ``_sh`` and signature ``_sig``; band
+    rows then carry null ``_sh``/``_sig``. One text pass thereby
+    serves both the band join and a consumer of the per-doc sets
+    (minhash_calibration).
+
+    Why Python wins here (guide §4.2): a JVM transform-lambda md5 per
+    (seed × shingle) walks 8 closures per row and showed multi-second
+    GC spikes in the interleaved A/B (6.7 s worst rep vs Arrow's
+    1.2 s); the Arrow path is one C md5 per (seed × distinct shingle)
+    with no expression interpretation (median 0.69 → 0.52 s on the
+    sf0.1 stream slice, identical 18,800-row output)."""
+    prefixes = [f"{k}|".encode() for k in range(num_hashes)]
+
+    def doc_rows(did, txt):
+        w = _java_tokens(txt) if txt is not None else []
+        if len(w) < shingle_n:
+            return
+        grams = dict.fromkeys(" ".join(w[i:i + shingle_n]).encode()
+                              for i in range(len(w) - shingle_n + 1))
+        sig = [min(hashlib.md5(p + g).hexdigest() for g in grams)
+               for p in prefixes]
+        if with_sig:
+            yield (did, -1, None, [g.decode() for g in grams], sig)
+        for b in range(num_bands):
+            bh = hashlib.md5("|".join(sig[b * rows_per_band:
+                                          (b + 1) * rows_per_band])
+                             .encode()).hexdigest()
+            yield (did, b, bh, None, None) if with_sig else (did, b, bh)
+
     def fn(batches):
         import pyarrow as pa
-        prefixes = [f"{k}|".encode() for k in range(num_hashes)]
-        for batch in batches:
-            ids = batch.column(0)
-            id_type = ids.type
-            out_id, out_bid, out_bh = [], [], []
-            for did, txt in zip(ids.to_pylist(),
-                                batch.column(1).to_pylist()):
-                if txt is None:
-                    continue
-                s = txt.strip(" ")
-                w = [t for t in _JAVA_WS.split(s) if t != ""] if s else []
-                n = len(w)
-                if n < shingle_n:
-                    continue
-                grams = {" ".join(w[i:i + shingle_n]).encode()
-                         for i in range(n - shingle_n + 1)}
-                sig = [min(hashlib.md5(p + g).hexdigest() for g in grams)
-                       for p in prefixes]
-                for b in range(num_bands):
-                    out_id.append(did)
-                    out_bid.append(b)
-                    out_bh.append(hashlib.md5(
-                        "|".join(sig[b * rows_per_band:
-                                     (b + 1) * rows_per_band]).encode())
-                        .hexdigest())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, id_type),
-                 pa.array(out_bid, pa.int32()),
-                 pa.array(out_bh, pa.string())],
-                names=[batch.schema.names[0], "band_id", "band_hash"])
+        fields = [("band_id", pa.int32()), ("band_hash", pa.string())]
+        if with_sig:
+            fields += [("_sh", pa.list_(pa.string())),
+                       ("_sig", pa.list_(pa.string()))]
+        yield from _flushed_batches(batches, doc_rows, fields)
     return fn
+
+
+def _banded_rows(df: DataFrame, id_col: str, text_col: str,
+                 num_hashes: int, num_bands: int, shingle_n: int,
+                 rows_per_band: int, with_sig: bool) -> DataFrame:
+    """The banding stage above as a frame; selects only the two needed
+    columns first so scan pruning survives the opaque function (guide
+    §4.1)."""
+    from pyspark.sql import types as T
+
+    # band_id is never null, and band_hash only on with_sig header
+    # rows — so banded_frame keeps both non-nullable.
+    fields = [df.schema[id_col],
+              T.StructField("band_id", T.IntegerType(), nullable=False),
+              T.StructField("band_hash", T.StringType(),
+                            nullable=with_sig)]
+    if with_sig:
+        fields += [T.StructField("_sh", T.ArrayType(T.StringType())),
+                   T.StructField("_sig", T.ArrayType(T.StringType()))]
+    return (df.select(F.col(id_col), F.col(text_col))
+              .mapInArrow(_banded_batches(num_hashes, num_bands,
+                                          rows_per_band, shingle_n,
+                                          with_sig),
+                          T.StructType(fields)))
 
 
 def banded_frame(df: DataFrame, id_col: str, text_col: str,
                  num_hashes: int = 8, num_bands: int = 4,
                  shingle_n: int = 3,
                  rows_per_band: int | None = None) -> DataFrame:
-    """Flat (id, band_id, band_hash) band rows of a document frame via
-    the Arrow stage above — value-identical to the
-    word_shingles→minhash_signature→explode(lsh_bands) chain (verified
-    row-for-row at sf0.1 and by the adversarial parity test). Selects
-    only the two needed columns first so scan pruning survives the
-    opaque function (guide §4.1)."""
-    from pyspark.sql import types as T
-
+    """Flat (id, band_id, band_hash) MinHash-LSH band rows of a
+    document frame (_banded_batches) — docs sharing any (band_id,
+    band_hash) bucket are near-dup candidates."""
     if rows_per_band is None:
         rows_per_band = _rows_per_band(num_hashes, num_bands)
-    # Nullability matches the JVM chain exactly (F.lit band_id and
-    # md5-of-concat_ws band_hash are provably non-null).
-    schema = T.StructType([df.schema[id_col],
-                           T.StructField("band_id", T.IntegerType(),
-                                         nullable=False),
-                           T.StructField("band_hash", T.StringType(),
-                                         nullable=False)])
-    return (df.select(F.col(id_col), F.col(text_col))
-              .mapInArrow(_banded_batches(num_hashes, num_bands,
-                                          rows_per_band, shingle_n),
-                          schema))
+    return _banded_rows(df, id_col, text_col, num_hashes, num_bands,
+                        shingle_n, rows_per_band, with_sig=False)
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -1024,27 +1039,25 @@ def minhash_calibration(df: DataFrame, id_col: str, text_col: str,
     run picks num_hashes/num_bands: if err_ppm is wide at the
     dedup threshold, the signature is too short for the corpus.
 
-    One pass computes shingles+signature per doc; candidates come from
-    the banded join (bucket-keyed shuffle, never n²); the per-pair
-    exact Jaccard intersects the two shingle ARRAYS carried into the
-    pair row — array work bounded by doc shingle counts, no extra
-    shuffle beyond the two signature joins. All integer outputs."""
-    # The shingle+signature frame feeds FOUR consumers (banding and
-    # both pair sides); a lazy localCheckpoint materializes that pass
-    # once instead of replaying the corpus scan per consumer (same
-    # posture as cross_source_overlap).
-    base = (df.select(F.col(id_col).alias("_id"),
-                      word_shingles(text_col, shingle_n).alias("_sh"))
-              .filter(F.size("_sh") > 0)
-              .select("_id", "_sh",
-                      minhash_signature(F.col("_sh"), num_hashes)
-                      .alias("_sig"))
-              .localCheckpoint(eager=False))
-    rows_per_band = _rows_per_band(num_hashes, num_bands)
-    banded = base.select("_id", F.explode(
-        lsh_bands(F.col("_sig"), num_bands, rows_per_band)).alias("b"))
-    flat = banded.select("_id", F.col("b.band_id").alias("band_id"),
-                         F.col("b.band_hash").alias("band_hash"))
+    One Arrow pass (_banded_batches with header rows) computes every
+    doc's shingles, signature and bands — the same signature the
+    production banding computes; candidates come from the banded join
+    (bucket-keyed shuffle, never n²); the per-pair exact Jaccard
+    intersects the two shingle ARRAYS carried into the pair row —
+    array work bounded by doc shingle counts, no extra shuffle beyond
+    the two signature joins. All integer outputs."""
+    # The header+band frame feeds FOUR consumers (banding on both join
+    # sides and both pair sides); a lazy localCheckpoint materializes
+    # that pass once instead of replaying the corpus scan per consumer
+    # (same posture as cross_source_overlap).
+    rows = _banded_rows(df.select(F.col(id_col).alias("_id"),
+                                  F.col(text_col).alias("_t")),
+                        "_id", "_t", num_hashes, num_bands, shingle_n,
+                        _rows_per_band(num_hashes, num_bands),
+                        with_sig=True).localCheckpoint(eager=False)
+    flat = (rows.filter(F.col("band_id") >= 0)
+            .select("_id", "band_id", "band_hash"))
+    base = rows.filter(F.col("band_id") < 0).select("_id", "_sh", "_sig")
     pairs = (flat.alias("x").join(flat.alias("y"),
                                   on=["band_id", "band_hash"])
              .filter(F.col("x._id") < F.col("y._id"))

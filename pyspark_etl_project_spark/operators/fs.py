@@ -4,14 +4,16 @@ The mart/index maintenance code probes and prunes directory layouts
 (bucket dirs, partition dirs, marker files) before Spark ever plans a
 scan. Going through the Hadoop FS API — not os.path — keeps every probe
 working on HDFS/S3/ABFS exactly as on local paths. This module is the
-single home for the py4j incantation so the four former copy-paste
-sites (_check_mart_layout, scd2_merge_batch, foreach_batch_scd2,
-band_index_batch) cannot drift.
+single home for the py4j incantation, and for the staged swap that
+every maintenance rewrite (compact_small_files, compact_kmv_store)
+replaces a directory with.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 def hadoop_fs(spark: SparkSession, path: str):
@@ -72,3 +74,38 @@ def read_text_marker(spark: SparkSession, path: str) -> str | None:
     # closeAll=True closes both ends for us.
     jvm.org.apache.hadoop.io.IOUtils.copyBytes(stream, baos, 4096, True)
     return bytes(baos.toByteArray()).decode("utf-8")
+
+
+def staged_rewrite(spark: SparkSession, path: str,
+                   rewritten: Callable[[], DataFrame]) -> None:
+    """Replace the parquet directory at ``path`` with the frame
+    ``rewritten()`` builds — typically a read of ``path`` itself —
+    without ever overwriting the input while reading it: write the
+    frame to ``<path>_compacting``, rename ``path`` aside to
+    ``<path>_precompact``, rename the staging dir into place (renaming
+    the original back if that fails), then delete the backup.
+
+    A stale backup dir from a crashed run is a data-loss trap: HDFS
+    rename semantics move the source INTO an existing destination
+    directory (silently nesting the live data), and the post-swap
+    cleanup would then delete it. So it is refused up front, before
+    ``rewritten`` is called — a rewrite that crashed between the two
+    renames leaves no dir at ``path``, and a schema-resolving read
+    would die with PATH_NOT_FOUND instead of this diagnostic. On object
+    stores a directory "rename" is a copy+delete, so the swap window is
+    not atomic there (use a transactional table format when readers
+    overlap maintenance)."""
+    jvm, fs, jpath = hadoop_fs(spark, path)
+    staging = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "_compacting")
+    backup = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "_precompact")
+    if fs.exists(backup):
+        raise IOError(
+            f"stale backup dir {backup} exists (previous rewrite "
+            "crashed mid-swap?); inspect and remove it before rewriting")
+    rewritten().write.mode("overwrite").parquet(staging.toString())
+    if not fs.rename(jpath, backup):
+        raise IOError(f"rename {path} -> {backup} failed")
+    if not fs.rename(staging, jpath):
+        fs.rename(backup, jpath)  # roll back; input left intact
+        raise IOError(f"rename {staging} -> {path} failed")
+    fs.delete(backup, True)

@@ -202,53 +202,29 @@ def compact_small_files(spark, path: str, target_files: int) -> int:
     """Rewrite a parquet directory into ``target_files`` files — the
     maintenance pass a streaming foreachBatch sink needs (every
     micro-batch otherwise adds small files until scan task count, not
-    data volume, dominates job time). Staging-dir rewrite: read fully,
-    write aside, swap — never overwrite the input in place while
-    reading it. Returns the new file count.
+    data volume, dominates job time). The swap is fs.staged_rewrite:
+    read fully, write aside, swap — never overwrite the input in place
+    while reading it. Returns the new file count.
 
     Path operations go through the Hadoop FileSystem API, so the same
     code works on any supported filesystem (local, HDFS, s3a/gs/abfs
-    object stores) — not just the local FS. NB: on object stores the
-    directory "rename" is a copy+delete under the hood; the swap window
-    is not atomic there (same caveat as every non-transactional table
-    format — use a transactional table layout when readers overlap
-    maintenance)."""
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(conf)
-
-    staging = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "_compacting")
-    backup = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "_precompact")
-    # A stale backup dir from a crashed run is a data-loss trap: HDFS
-    # rename semantics move the source INTO an existing destination
-    # directory (silently nesting the live data), and the post-swap
-    # cleanup would then delete it. Refuse up front instead.
-    if fs.exists(backup):
-        raise IOError(
-            f"stale backup dir {backup} exists (previous compaction "
-            "crashed mid-swap?); inspect and remove it before compacting")
-
+    object stores) — not just the local FS."""
     # The read path is glob-escaped: Spark glob-expands reader paths,
     # so a dir containing { } [ ] * ? (e.g. a bucket dir under a
     # metachar-bearing index root) would mis-resolve. Write paths and
-    # the Hadoop rename Paths below are literal APIs — no escaping.
-    from pyspark_etl_project_spark.operators.fs import escape_glob
+    # the Hadoop rename Paths are literal APIs — no escaping.
+    from pyspark_etl_project_spark.operators.fs import (
+        escape_glob, hadoop_fs, staged_rewrite)
 
     # mergeSchema: a foreachBatch sink dir is append-accumulated, so
     # files can differ in vintage (a later deploy added a column); the
     # swap REPLACES the input, so a single-footer read here would
     # silently delete the late-added column (r13 vacuum/merge class).
-    df = (spark.read.option("mergeSchema", "true")
-          .parquet(escape_glob(path)))
-    df.repartition(target_files).write.mode("overwrite").parquet(staging.toString())
-    if not fs.rename(jpath, backup):
-        raise IOError(f"rename {path} -> {backup} failed")
-    if not fs.rename(staging, jpath):
-        fs.rename(backup, jpath)  # roll back; input left intact
-        raise IOError(f"rename {staging} -> {path} failed")
-    fs.delete(backup, True)
+    staged_rewrite(spark, path, lambda: (
+        spark.read.option("mergeSchema", "true")
+        .parquet(escape_glob(path)).repartition(target_files)))
 
+    _, fs, jpath = hadoop_fs(spark, path)
     n = 0
     it = fs.listStatus(jpath)
     for i in range(len(it)):

@@ -133,22 +133,25 @@ def mart_bucket(key: str = KEY, num_buckets: int = 16):
 
 
 def _layout_error(path: str, detail: str) -> ValueError:
-    """The one refusal for a mart directory write_mart did not lay out:
-    dynamic overwrite only replaces the partitions the incoming frame
-    produces, so writing beside foreign files (or with a changed
-    num_buckets) leaves them in place and every read double-counts."""
+    """The one refusal for a bucketed directory — the SCD2 mart's
+    MART_BUCKET dirs or the streaming band index's DOC_BUCKET dirs —
+    that its writer did not lay out: writes replace or append only the
+    bucket dirs they produce, and reads and dedup probes address only
+    those dirs, so foreign files (or bucket ids from a changed
+    num_buckets) would stay in place and duplicate rows on read or
+    re-append already-indexed docs."""
     return ValueError(
-        f"mart at {path} is not in the bucketed mart layout ({detail}); "
-        "a write under dynamic overwrite would leave those files in "
-        "place and duplicate rows on read. Rebuild the mart with "
-        "write_mart first.")
+        f"{path} is not in the bucketed layout ({detail}); a write "
+        "beside those files would leave them in place and duplicate "
+        "rows. Rebuild it in the bucketed layout first.")
 
 
-def _bucket_dir_ids(spark, path: str, partition_col: str | None) -> list[int]:
-    """The MART_BUCKET ids on disk at ``path``, after checking that the
-    directory holds only write_mart's layout: ``MART_BUCKET=<id>`` dirs,
-    under ``<partition_col>=<value>`` dirs when a partition column is
-    set. An absent or empty path is an empty mart. Uses the Hadoop
+def _bucket_dir_ids(spark, path: str, partition_col: str | None,
+                    bucket_col: str = MART_BUCKET_COL) -> list[int]:
+    """The bucket ids on disk at ``path``, after checking that the
+    directory holds only the bucketed layout: ``<bucket_col>=<id>``
+    dirs, under ``<partition_col>=<value>`` dirs when a partition
+    column is set. An absent or empty path is empty. Uses the Hadoop
     FileSystem API so the check works on HDFS/S3, not just local
     paths."""
     from pyspark_etl_project_spark.operators.fs import hadoop_fs
@@ -157,11 +160,10 @@ def _bucket_dir_ids(spark, path: str, partition_col: str | None) -> list[int]:
     if not fs.exists(hpath):
         return []
 
-    # Hidden-entry convention matches Spark's own (and the band-index
-    # guard's): BOTH '_' and '.' prefixes — a stray .DS_Store or editor
-    # dot-temp in the mart dir must not raise the layout refusal. One
-    # (name, is_dir, path) tuple per entry keeps py4j calls per entry
-    # constant.
+    # Hidden entries follow Spark's own convention: BOTH '_' and '.'
+    # prefixes — a stray _SUCCESS, .DS_Store or editor dot-temp must
+    # not raise the layout refusal. One (name, is_dir, path) tuple per
+    # entry keeps py4j calls per entry constant.
     def visible(p):
         out = []
         for st in fs.listStatus(p):
@@ -184,27 +186,33 @@ def _bucket_dir_ids(spark, path: str, partition_col: str | None) -> list[int]:
                 path, f"expected {partition_col}=<value> dirs, found "
                 f"{bad[:4]}")
         entries = [c for _, _, jp in entries for c in visible(jp)]
-    bad = strays(entries, MART_BUCKET_COL, digits=True)
+    # A non-numeric bucket suffix (a NULL-bucket
+    # __HIVE_DEFAULT_PARTITION__ dir, or a crashed compaction's
+    # <bucket>_precompact / _compacting staging dir) is foreign too.
+    bad = strays(entries, bucket_col, digits=True)
     if bad:
         raise _layout_error(
-            path, f"expected {MART_BUCKET_COL}=<id> dirs, found {bad[:4]}")
+            path, f"expected {bucket_col}=<id> dirs, found {bad[:4]}")
     return [int(n.split("=", 1)[1]) for n, _, _ in entries]
 
 
-def _check_mart_layout(spark, path: str, partition_col: str | None,
-                       num_buckets: int) -> None:
+def _check_bucket_layout(spark, path: str, partition_col: str | None,
+                         num_buckets: int,
+                         bucket_col: str = MART_BUCKET_COL) -> set[int]:
     """Fail fast, before any data moves, when the on-disk layout at
-    ``path`` is not the one this write would produce: a directory whose
-    entries are not in the bucketed layout, missing ``partition_col``
-    dirs, or bucket ids at or above ``num_buckets`` (num_buckets must
-    stay constant for a mart path)."""
-    stale = sorted({b for b in _bucket_dir_ids(spark, path, partition_col)
-                    if b >= num_buckets})
+    ``path`` is not the one this write would produce: entries outside
+    the bucketed layout (_bucket_dir_ids), or bucket ids at or above
+    ``num_buckets`` (num_buckets must stay constant for a path).
+    Returns the set of bucket ids on disk, so a caller that tracks
+    existing buckets needs no second listing."""
+    ids = set(_bucket_dir_ids(spark, path, partition_col, bucket_col))
+    stale = sorted(b for b in ids if b >= num_buckets)
     if stale:
         raise _layout_error(
             path, f"bucket ids {stale[:4]} are outside "
             f"num_buckets={num_buckets}; num_buckets must stay constant "
-            "for a mart path")
+            "for a path")
+    return ids
 
 
 def write_mart(mart: DataFrame, path: str,
@@ -230,7 +238,7 @@ def write_mart(mart: DataFrame, path: str,
     write to one feed's partitions (one feed never rewrites another).
     ``num_buckets`` must stay constant for a given mart path; size it so
     one bucket ≈ a few GB at the target scale (1024+ at 100 TB). A
-    pre-write layout probe (_check_mart_layout) enforces this: a
+    pre-write layout probe (_check_bucket_layout) enforces this: a
     directory not in this layout, or on-disk bucket ids at or above
     ``num_buckets``, raises ValueError instead of silently mixing
     layouts (dynamic overwrite would leave the old files in place and
@@ -249,7 +257,7 @@ def write_mart(mart: DataFrame, path: str,
     """
     spark = mart.sparkSession
     if check_layout:
-        _check_mart_layout(spark, path, partition_col, num_buckets)
+        _check_bucket_layout(spark, path, partition_col, num_buckets)
     parts = ([partition_col] if partition_col is not None else []) \
         + [MART_BUCKET_COL]
     out = mart.withColumn(MART_BUCKET_COL, mart_bucket(key, num_buckets))

@@ -541,7 +541,7 @@ def foreach_batch_scd2(stream: DataFrame, mart_path: str, initial_mart: DataFram
     # bump cannot leak a stale offset: restart recomputes the watermark
     # from the mart itself, which already contains the written ids.
     from pyspark_etl_project_spark.operators.scd2 import (
-        _check_mart_layout, _surrogate_offset, read_mart)
+        _check_bucket_layout, _surrogate_offset, read_mart)
 
     hwm = [_surrogate_offset(read_mart(spark, mart_path), surrogate_col)]
     # Verify the on-disk layout ONCE per run (the resume path skips the
@@ -550,7 +550,7 @@ def foreach_batch_scd2(stream: DataFrame, mart_path: str, initial_mart: DataFram
     # this run owns the mart — write_mart's probe lists every partition
     # dir, O(sources × buckets) metadata per micro-batch at the
     # documented 1024+ bucket scale.
-    _check_mart_layout(spark, mart_path, partition_col, num_buckets)
+    _check_bucket_layout(spark, mart_path, partition_col, num_buckets)
     # Read the provenance marker ONCE per run, not per micro-batch —
     # it cannot change while this run owns the mart (only the seed
     # path writes it), and a py4j file read per batch is avoidable
@@ -633,69 +633,12 @@ def stream_documents(spark: SparkSession, sf_dir: str,
 DOC_BUCKET_COL = "DOC_BUCKET"
 
 
-def _band_index_existing_buckets(spark: SparkSession, bands_path: str,
-                                 num_buckets: int) -> set[str]:
-    """ONE root listing serving both the layout guard and the
-    touched-dir intersection: returns the set of existing DOC_BUCKET
-    dir suffixes (empty when the index path doesn't exist yet), or
-    raises when the on-disk layout disagrees with this module's
-    bucketed contract.
-
-    The band-index twin of _check_mart_layout (kept separate: this one
-    must also RETURN the listing, and the refusal messages name this
-    module's rebuild contract). Hidden entries follow Spark's own
-    convention: BOTH '_' and '.' prefixes (e.g. _SUCCESS, .DS_Store,
-    editor dot-temps) — classifying a stray dotfile as data would wedge
-    the stream. Appending DOC_BUCKET dirs beside a legacy FLAT index
-    would both bypass the already-indexed probe (no dirs match → every
-    redelivered doc re-appends, doubling downstream corpus-hit counts)
-    and leave a mixed layout Spark refuses to read ("Conflicting
-    directory structures"). A num_buckets change mid-index would probe
-    the wrong dirs with the same silent re-append — the bucket count is
-    fixed per index path."""
-    from pyspark_etl_project_spark.operators.fs import hadoop_fs
-
-    _, fs, jpath = hadoop_fs(spark, bands_path)
-    if not fs.exists(jpath):
-        return set()
-    entries = [s for s in fs.listStatus(jpath)
-               if not s.getPath().getName().startswith(("_", "."))]
-    existing, stray = set(), []
-    for s in entries:
-        name = s.getPath().getName()
-        suffix = name.split("=", 1)[1] if "=" in name else ""
-        # Non-numeric bucket suffixes are FOREIGN layout, not data
-        # this module wrote — route to the guard's diagnostic, not
-        # a bare int() ValueError.
-        if (s.isDirectory() and name.startswith(DOC_BUCKET_COL + "=")
-                and suffix.isdigit()):
-            existing.add(suffix)
-        else:
-            stray.append(name)
-    if stray:
-        raise ValueError(
-            f"band index at {bands_path} has a legacy flat or "
-            f"foreign layout (found {stray[:4]}); appending "
-            "bucket-partitioned data would bypass the dedup guard "
-            "and mix layouts — rebuild the index once in the "
-            "bucketed layout")
-    over = [b for b in existing if int(b) >= num_buckets]
-    if over:
-        raise ValueError(
-            f"band index at {bands_path} has bucket dirs "
-            f"{sorted(over)[:4]} outside num_buckets={num_buckets}; "
-            "num_buckets must stay constant for an index path (a "
-            "different bucketing probes the wrong dirs and silently "
-            "re-appends already-indexed docs)")
-    return existing
-
-
 def band_index_batch(batch: DataFrame, bands_path: str,
                      num_hashes: int = 8, num_bands: int = 4,
                      shingle_n: int = 3,
                      rows_per_band: int | None = None,
                      num_buckets: int = 16,
-                     existing_buckets: set[str] | None = None) -> set[str]:
+                     existing_buckets: set[int] | None = None) -> set[int]:
     """One micro-batch of band-index maintenance: band the docs and
     append to the persistent (doc_id, band_id, band_hash) index —
     IDEMPOTENT under at-least-once redelivery. A foreachBatch retry
@@ -715,14 +658,14 @@ def band_index_batch(batch: DataFrame, bands_path: str,
     stream's lifetime. Readers are unaffected: the partition column
     rides along and every consumer projects explicit columns.
 
-    ``existing_buckets`` is the set of DOC_BUCKET dir suffixes already
-    on disk (foreach_batch_band_index lists + layout-checks ONCE at
-    stream start via _band_index_existing_buckets and maintains the
-    set across batches — the per-batch FS listing was this sink's
-    dominant fixed cost at small batch sizes, mirroring the SCD2
-    path's check_layout=False hoist). Direct/test callers leave the
+    ``existing_buckets`` is the set of DOC_BUCKET ids already on disk
+    (foreach_batch_band_index lists + layout-checks ONCE at stream
+    start through the mart's guard, _check_bucket_layout, and
+    maintains the set across batches — the per-batch FS listing was
+    this sink's dominant fixed cost at small batch sizes, mirroring
+    the SCD2 path's check_layout=False hoist). Direct/test callers leave the
     default None and get the listing + guard per call. Returns the
-    batch's touched bucket suffixes — after this call every one of
+    batch's touched bucket ids — after this call every one of
     them exists on disk (pre-existing, or just written: a touched
     bucket with no prior dir always has surviving fresh rows, since
     no index data existed to mark its docs as seen), so the caller
@@ -749,7 +692,8 @@ def band_index_batch(batch: DataFrame, bands_path: str,
 
     from pyspark_etl_project_spark.extensions.dedup import (
         _rows_per_band, banded_frame)
-    from pyspark_etl_project_spark.operators.scd2 import mart_bucket
+    from pyspark_etl_project_spark.operators.scd2 import (
+        _check_bucket_layout, mart_bucket)
 
     if rows_per_band is None:
         rows_per_band = _rows_per_band(num_hashes, num_bands)
@@ -757,8 +701,8 @@ def band_index_batch(batch: DataFrame, bands_path: str,
     if existing_buckets is None:
         # Runs BEFORE the persist so a refused batch doesn't leak a
         # pinned plan in the cache manager.
-        existing_buckets = _band_index_existing_buckets(
-            spark, bands_path, num_buckets)
+        existing_buckets = _check_bucket_layout(
+            spark, bands_path, None, num_buckets, DOC_BUCKET_COL)
     # A maxFilesPerTrigger=1 micro-batch is ONE file = one partition,
     # which would run the whole shingle→minhash compute (8 md5 lanes
     # per shingle — the batch's dominant CPU cost) on a single core.
@@ -816,7 +760,7 @@ def band_index_batch(batch: DataFrame, bands_path: str,
             return set()
         if vals["has_null"]:
             raise ValueError(_null_guard_msg)
-        return {str(b) for b in vals["bs"]}
+        return set(vals["bs"])
     banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         # ONE pre-flight job computes both admission facts: whether any
@@ -829,7 +773,7 @@ def band_index_batch(batch: DataFrame, bands_path: str,
             F.collect_set(F.col(DOC_BUCKET_COL)).alias("bs")).first()
         if pre["has_null"]:
             raise ValueError(_null_guard_msg)
-        touched = {str(b) for b in pre["bs"]}
+        touched = set(pre["bs"])
         # Banded to nothing (empty batch / all-empty texts): no write,
         # no probe.
         if not touched:
@@ -840,7 +784,7 @@ def band_index_batch(batch: DataFrame, bands_path: str,
         from pyspark_etl_project_spark.operators.fs import escape_glob
 
         dirs = [escape_glob(f"{bands_path}/{DOC_BUCKET_COL}={b}")
-                for b in sorted(touched & existing_buckets, key=int)]
+                for b in sorted(touched & existing_buckets)]
         if dirs:
             arriving = banded.select("doc_id").distinct()
             idx_slice = (spark.read.option("basePath", bands_path)
@@ -911,14 +855,15 @@ def foreach_batch_band_index(stream: DataFrame, bands_path: str,
     (the FS listing + its guard were the dominant per-batch fixed
     cost at small batch sizes)."""
     from pyspark_etl_project_spark.extensions.dedup import _rows_per_band
+    from pyspark_etl_project_spark.operators.scd2 import _check_bucket_layout
 
     # Same divisibility guard as every batch-side banding site: a plain
     # floor division here would silently drop trailing MinHash positions
     # and desync this stream-built index from the batch-built index it
     # must join against.
     rows_per_band = _rows_per_band(num_hashes, num_bands)
-    existing = _band_index_existing_buckets(stream.sparkSession,
-                                            bands_path, num_buckets)
+    existing = _check_bucket_layout(stream.sparkSession, bands_path, None,
+                                    num_buckets, DOC_BUCKET_COL)
 
     def handle(batch: DataFrame, _epoch: int) -> None:
         existing.update(band_index_batch(
@@ -973,9 +918,10 @@ def compact_band_index(spark: SparkSession, bands_path: str,
     from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
     from pyspark_etl_project_spark.operators.joins import compact_small_files
+    from pyspark_etl_project_spark.operators.scd2 import _check_bucket_layout
 
-    existing = _band_index_existing_buckets(spark, bands_path, num_buckets)
-    buckets = sorted(existing, key=int)
+    buckets = sorted(_check_bucket_layout(spark, bands_path, None,
+                                          num_buckets, DOC_BUCKET_COL))
     if not buckets:
         return 0
     workers = max(1, min(parallelism, len(buckets)))
@@ -1036,37 +982,18 @@ def compact_kmv_store(spark: SparkSession, store_path: str,
     min-k is associative, so the k smallest distinct of the union
     (which is exactly what every consumer computes — the stats.py
     hash-dedup invariant) equals the k smallest distinct of any
-    superset that contains them. Staged rewrite via compact_small_files
-    semantics is unnecessary here: the store is append-only and tiny,
-    so read → overwrite-aside → swap happens through one overwrite of
-    a temp dir + rename, reusing the library's staged rewrite.
+    superset that contains them. The store is swapped through the same
+    staged rewrite as compact_small_files (fs.staged_rewrite: write
+    aside, rename swap, stale-backup refusal before the read).
     Returns the post-fold file count (1). Run between streaming runs,
     like every maintenance pass here."""
-    from pyspark_etl_project_spark.operators.fs import escape_glob, hadoop_fs
+    from pyspark_etl_project_spark.operators.fs import (
+        escape_glob, staged_rewrite)
 
-    jvm, fs, jpath = hadoop_fs(spark, store_path)
-    staging = jvm.org.apache.hadoop.fs.Path(
-        store_path.rstrip("/") + "_compacting")
-    backup = jvm.org.apache.hadoop.fs.Path(
-        store_path.rstrip("/") + "_prefold")
-    # Stale-backup refusal BEFORE the schema-resolving read: a fold
-    # that crashed between the two renames leaves the data in _prefold
-    # and no store dir — reading first would die with PATH_NOT_FOUND
-    # instead of this diagnostic.
-    if fs.exists(backup):
-        raise IOError(
-            f"stale backup dir {backup} exists (previous fold crashed "
-            "mid-swap?); inspect and remove it before folding")
     # Reader path glob-escaped, same as every other maintenance read.
-    folded = (spark.read.parquet(escape_glob(store_path))
-              .distinct().orderBy("h").limit(k))
-    folded.coalesce(1).write.mode("overwrite").parquet(staging.toString())
-    if not fs.rename(jpath, backup):
-        raise IOError(f"rename {store_path} -> {backup} failed")
-    if not fs.rename(staging, jpath):
-        fs.rename(backup, jpath)
-        raise IOError(f"rename {staging} -> {store_path} failed")
-    fs.delete(backup, True)
+    staged_rewrite(spark, store_path, lambda: (
+        spark.read.parquet(escape_glob(store_path))
+        .distinct().orderBy("h").limit(k).coalesce(1)))
     return 1
 
 

@@ -2018,21 +2018,64 @@ def test_arrow_gram_stage_matches_jvm_expression(spark):
              arrow.filter("_start = -1").collect()}
     assert got_n == want_n
 
+def test_arrow_stages_flush_bounded_batches(monkeypatch):
+    """Both Arrow stages yield RecordBatches of at most
+    _ARROW_FLUSH_ROWS rows — also for ONE document with more k-gram
+    windows than the bound, so worker memory is bounded by the
+    constant, not by document length — and the bounded rows equal the
+    unbounded result (no row lost or repeated at a flush boundary,
+    including across input batches). Spark-free: drives the stage
+    functions with Arrow batches directly."""
+    import pyarrow as pa
+
+    from pyspark_etl_project_spark.extensions import dedup
+
+    bound = dedup._ARROW_FLUSH_ROWS
+    long_doc = " ".join(f"w{i % 997}" for i in range(bound + 50))
+    # Enough short docs that the banding stage's 4 rows per doc also
+    # exceed the bound.
+    short = [f"s{i} t{i} u{i} v{i}" for i in range(bound // 4 + 1)]
+
+    def batch(ids, texts):
+        return pa.RecordBatch.from_arrays(
+            [pa.array(ids, pa.int64()), pa.array(texts, pa.string())],
+            names=["doc_id", "text"])
+
+    inputs = [batch([0], [long_doc]),
+              batch(list(range(1, len(short) + 1)), short)]
+    stages = [dedup._gram_hash_batches(3, with_n=True),
+              dedup._gram_hash_batches(3, with_n=False),
+              dedup._banded_batches(8, 4, 2, 3, with_sig=False),
+              dedup._banded_batches(8, 4, 2, 3, with_sig=True)]
+    bounded = [list(stage(iter(inputs))) for stage in stages]
+    monkeypatch.setattr(dedup, "_ARROW_FLUSH_ROWS", 1 << 62)
+    unbounded = [list(stage(iter(inputs))) for stage in stages]
+    for got, want in zip(bounded, unbounded):
+        assert len(got) > 1
+        assert all(b.num_rows <= bound for b in got)
+        assert (pa.Table.from_batches(got).to_pylist()
+                == pa.Table.from_batches(want).to_pylist())
+    # The long doc alone overflows the gram stage's bound.
+    assert bounded[1][0].num_rows == bound
+    assert bounded[1][0].column(0).to_pylist() == [0] * bound
+
+
 def test_arrow_banded_frame_matches_jvm_expression(spark):
-    """The r18 mapInArrow banding stage must replicate the JVM
-    word_shingles->minhash_signature->explode(lsh_bands) chain
-    BIT-FOR-BIT: distinct 3-gram shingles, per-seed min over
-    md5('k|'||shingle) hex (string min == UTF8String binary compare on
-    ASCII hex), band hash = md5 of the '|'-joined signature slice, and
-    the size(_sh) > 0 admission filter (NULL/short/empty docs emit
-    nothing). Probes the same whitespace edge classes as the gram-stage
-    parity test plus duplicate shingles (array_distinct semantics) and
-    a doc with exactly shingle_n tokens (single shingle)."""
+    """The mapInArrow banding stage must replicate the JVM
+    word_shingles -> md5 signature -> band chain BIT-FOR-BIT: distinct
+    3-gram shingles, per-seed min over md5('k|'||shingle) hex (string
+    min == UTF8String binary compare on ASCII hex), band hash = md5 of
+    the '|'-joined signature slice, and the size(_sh) > 0 admission
+    filter (NULL/short/empty docs emit nothing). Probes the same
+    whitespace edge classes as the gram-stage parity test plus
+    duplicate shingles (array_distinct semantics) and a doc with
+    exactly shingle_n tokens (single shingle). The calibration's
+    per-doc shingles and signature (the stage's header rows) must equal
+    the same reference."""
     from pyspark.sql import functions as F
 
     from pyspark_etl_project_spark.extensions.dedup import (
-        _rows_per_band, banded_frame, lsh_bands, minhash_signature,
-        word_shingles)
+        _banded_rows, _rows_per_band, banded_frame, word_shingles)
 
     rows = [
         (1, "a b c d e"),
@@ -2050,17 +2093,26 @@ def test_arrow_banded_frame_matches_jvm_expression(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     num_hashes, num_bands, shingle_n = 8, 4, 3
     rpb = _rows_per_band(num_hashes, num_bands)
-    jvm = (df.select("doc_id",
+
+    def seed_md5(k):
+        # A factory, not `lambda s, k=k:` — F.transform would take a
+        # two-arg lambda as (element, index).
+        return lambda s: F.md5(F.concat(F.lit(f"{k}|"), s))
+
+    sig = F.array(*[F.array_min(F.transform("_sh", seed_md5(k)))
+                    for k in range(num_hashes)])
+    bands = F.array(*[
+        F.struct(F.lit(b).alias("band_id"),
+                 F.md5(F.concat_ws("|", F.slice("_sig", b * rpb + 1, rpb)))
+                 .alias("band_hash"))
+        for b in range(num_bands)])
+    ref = (df.select("doc_id",
                      word_shingles("text", shingle_n).alias("_sh"))
              .filter(F.size("_sh") > 0)
-             .select("doc_id",
-                     minhash_signature(F.col("_sh"), num_hashes)
-                     .alias("_sig"))
-             .select("doc_id",
-                     F.explode(lsh_bands(F.col("_sig"), num_bands, rpb))
-                     .alias("b"))
-             .select("doc_id", F.col("b.band_id").alias("band_id"),
-                     F.col("b.band_hash").alias("band_hash")))
+             .withColumn("_sig", sig))
+    jvm = (ref.select("doc_id", F.explode(bands).alias("b"))
+              .select("doc_id", F.col("b.band_id").alias("band_id"),
+                      F.col("b.band_hash").alias("band_hash")))
     arrow = banded_frame(df, "doc_id", "text", num_hashes, num_bands,
                          shingle_n)
     assert arrow.schema == jvm.schema
@@ -2069,3 +2121,13 @@ def test_arrow_banded_frame_matches_jvm_expression(spark):
     assert got == want
     # The admission filter must have kept the short/NULL/empty docs out.
     assert {t[0] for t in got} == {1, 2, 3, 4, 10, 11}
+    # minhash_calibration's per-doc shingles and signature: the header
+    # rows of the same stage, in array_distinct's first-occurrence order.
+    headers = (_banded_rows(df, "doc_id", "text", num_hashes, num_bands,
+                            shingle_n, rpb, with_sig=True)
+               .filter("band_id = -1"))
+    got_sig = {r["doc_id"]: (r["_sh"], r["_sig"]) for r in
+               headers.collect()}
+    want_sig = {r["doc_id"]: (r["_sh"], r["_sig"]) for r in
+                ref.collect()}
+    assert got_sig == want_sig

@@ -1012,8 +1012,8 @@ def test_band_index_rejects_flat_legacy_layout(spark, tmp_path):
     """Appending bucket-partitioned band rows beside a legacy FLAT
     index would bypass the already-indexed guard (no DOC_BUCKET dirs
     match → every redelivered doc re-appends) and leave a mixed layout
-    Spark refuses to read — the guard must refuse instead, like
-    _check_mart_layout does for the mart."""
+    Spark refuses to read — the guard (the mart's own
+    _check_bucket_layout) must refuse instead."""
     from pyspark_etl_project_spark.streaming.ingest import band_index_batch
 
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -1023,7 +1023,7 @@ def test_band_index_rejects_flat_legacy_layout(spark, tmp_path):
     (spark.createDataFrame([(1, 0, "ab")],
                            "doc_id long, band_id int, band_hash string")
      .write.parquet(path))
-    with pytest.raises(ValueError, match="legacy flat or foreign layout"):
+    with pytest.raises(ValueError, match="expected DOC_BUCKET=<id> dirs"):
         band_index_batch(docs, path)
 
 
@@ -1173,7 +1173,7 @@ def test_band_index_foreign_bucket_suffix_raises_guard_message(spark, tmp_path):
     band_index_batch(docs, path, num_buckets=4)
     os.makedirs(os.path.join(
         path, DOC_BUCKET_COL + "=__HIVE_DEFAULT_PARTITION__"))
-    with pytest.raises(ValueError, match="foreign layout"):
+    with pytest.raises(ValueError, match="expected DOC_BUCKET=<id> dirs"):
         band_index_batch(docs, path, num_buckets=4)
 
 
@@ -1196,7 +1196,7 @@ def test_bucket_pruned_read_names_legacy_layout(spark, tmp_path):
     mart_path = str(tmp_path / "mart")
     mart.write.parquet(mart_path)
 
-    with pytest.raises(ValueError, match="not in the bucketed mart layout"):
+    with pytest.raises(ValueError, match="not in the bucketed layout"):
         read_mart_touched(spark, mart_path, [0, 1])
 
     batch = spark.createDataFrame([("K-2", 20)], "ssi string, v long")
@@ -1253,7 +1253,7 @@ def test_check_mart_layout_ignores_dotfiles(spark, tmp_path):
     layout probe must not classify them as data and raise the
     layout refusal on a perfectly valid mart."""
     from pyspark_etl_project_spark.operators.scd2 import (
-        _check_mart_layout, write_mart)
+        _check_bucket_layout, write_mart)
 
     mart = spark.createDataFrame([(1, "K-1", 10)],
                                  "csd_id long, ssi string, v long")
@@ -1263,7 +1263,7 @@ def test_check_mart_layout_ignores_dotfiles(spark, tmp_path):
     (tmp_path / "mart" / ".DS_Store").write_bytes(b"junk")
     # Must not raise: the dotfile is hidden, the bucket dirs are the
     # only real entries.
-    _check_mart_layout(spark, mart_path, None, 4)
+    _check_bucket_layout(spark, mart_path, None, 4)
 
 
 def test_read_mart_touched_glob_metachar_path(spark, tmp_path):
@@ -1416,7 +1416,7 @@ def test_read_mart_touched_metachar_legacy_fallback(spark, tmp_path):
                                  "csd_id long, ssi string, v long")
     foreign_path = str(tmp_path / "m[x]" / "foreign")
     mart.write.parquet(foreign_path)
-    with pytest.raises(ValueError, match="not in the bucketed mart layout"):
+    with pytest.raises(ValueError, match="not in the bucketed layout"):
         read_mart_touched(spark, foreign_path, [0, 1])
 
     bucketed_path = str(tmp_path / "m[x]" / "bucketed")
@@ -1449,9 +1449,10 @@ def test_compact_band_index_refuses_crashed_state(spark, tmp_path):
                   if d.startswith(DOC_BUCKET_COL + "="))
     # Simulate the crash artifact of that bucket's staged rewrite.
     os.makedirs(os.path.join(path, bucket + "_precompact"))
-    with pytest.raises(Exception, match="stale backup|foreign layout"):
+    with pytest.raises(Exception,
+                       match="stale backup|expected DOC_BUCKET=<id> dirs"):
         compact_band_index(spark, path)
-    with pytest.raises(ValueError, match="foreign layout"):
+    with pytest.raises(ValueError, match="expected DOC_BUCKET=<id> dirs"):
         band_index_batch(docs, path)
 
 
@@ -1541,14 +1542,15 @@ def test_compact_kmv_store_lossless_fold(spark, tmp_path):
     kmv_batch(docs.filter(F.col("doc_id") >= 120), store, k=k)
     after = kth()
     assert after is not None and after <= before
-    # crash-mid-swap recovery contract: a leftover _prefold backup dir
-    # (the window between the two renames) must refuse loudly BEFORE
-    # any data moves, and leave both dirs untouched for inspection.
+    # crash-mid-swap recovery contract: a leftover _precompact backup
+    # dir (the window between the two renames) must refuse loudly
+    # BEFORE any data moves, and leave both dirs untouched for
+    # inspection.
     import os
 
     import pytest
 
-    backup = str(tmp_path / "kmv_prefold")
+    backup = str(tmp_path / "kmv_precompact")
     os.makedirs(backup)
     with pytest.raises(IOError, match="stale backup"):
         compact_kmv_store(spark, store, k=k)

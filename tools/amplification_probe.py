@@ -16,10 +16,11 @@ Prints one markdown row per probe: | name | base s | 100× s | ratio |.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -575,14 +576,16 @@ def probe_band_index_batch(spark: SparkSession, n: int) -> None:
     whole index's doc_id column per batch, growing without bound over
     the stream's lifetime. Fresh doc_ids per call (call counter salt)
     so the timed run exercises the real probe + append path."""
+    from pyspark_etl_project_spark.operators.scd2 import _check_bucket_layout
     from pyspark_etl_project_spark.streaming.ingest import (
-        _band_index_existing_buckets, band_index_batch)
+        DOC_BUCKET_COL, band_index_batch)
 
     _band_probe_setup(spark, [n, n * AMP] if n == _BAND_BASE else [n])
     state = _BAND_PROBE[n]
     path, nb = state[0], state[1]
     if len(state) == 3:  # lazily attach the per-run bucket-dir set
-        state.append(_band_index_existing_buckets(spark, path, nb))
+        state.append(_check_bucket_layout(spark, path, None, nb,
+                                          DOC_BUCKET_COL))
     existing = state[3]
     state[2] += 1
     base_id = 10_000_000 * state[2] + n

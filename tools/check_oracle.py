@@ -27,13 +27,14 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # argv parsing happens under __main__ (bottom of file): this module is
 # exec'd by tests/test_check_oracle_canonicalizer.py at pytest

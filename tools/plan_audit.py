@@ -8,10 +8,11 @@ Usage: python tools/plan_audit.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 DEFAULT = [
     "scan_filter_project", "window_dedup_latest", "cdc_router",
