@@ -438,6 +438,25 @@ def resample_daily_ffill_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                          .alias("value_ffill")))
 
 
+def _seed_grand_total(df: DataFrame) -> DataFrame:
+    """``df`` plus one all-NULL seed row, and a ``_real`` column that is
+    1 on df's rows and NULL on the seed.
+
+    Spark's native CUBE / GROUPING SETS over an empty input emits no
+    rows at all, while standard SQL (and the DuckDB oracle) still emits
+    the grand-total row with COUNT 0 and SUM NULL. Aggregating the
+    seeded frame with COUNT(_real) (the seed counts as 0, and its NULL
+    measures add nothing to a SUM) and keeping only groups with a real
+    row or the grand-total grouping id gives the standard answer in the
+    same single scan, Expand and shuffle: the seed is a one-row Range
+    unioned under the Expand, and any subtotal group it alone creates
+    is filtered out."""
+    seed = df.sparkSession.range(1).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in df.schema])
+    return (df.withColumn("_real", F.lit(1))
+            .unionByName(seed.withColumn("_real", F.lit(None).cast("int"))))
+
+
 # --- CUBE subtotals with grouping id ---------------------------------------
 # All four grouping combinations in ONE pass (one Expand + one shuffle —
 # never four scans); grouping_id disambiguates subtotal rows from real
@@ -453,13 +472,14 @@ FROM events
 GROUP BY CUBE(event_type, user_id % 10)
 """)
 def cube_event_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = (load(spark, sf_dir, "events")
-          .withColumn("user_bucket", F.col("user_id") % 10))
-    return (ev.cube("event_type", "user_bucket")
+    ev = load(spark, sf_dir, "events").select(
+        "event_type", (F.col("user_id") % 10).alias("user_bucket"), "value")
+    return (_seed_grand_total(ev).cube("event_type", "user_bucket")
             .agg(F.grouping_id().cast("long").alias("gid"),
-                 F.count(F.lit(1)).alias("n_events"),
+                 F.count("_real").alias("n_events"),
                  F.floor(F.sum(F.col("value").cast("decimal(18,6)")) * 100)
                   .cast("long").alias("value_cents"))
+            .filter((F.col("n_events") > 0) | (F.col("gid") == 3))
             .select("event_type", "user_bucket", "gid", "n_events",
                     "value_cents"))
 
@@ -572,14 +592,17 @@ FROM lineitem
 GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
 """)
 def grouping_sets_flag_status_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("_gs_lineitem")
+    li = load(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_linestatus", "l_quantity")
+    _seed_grand_total(li).createOrReplaceTempView("_gs_lineitem")
     return spark.sql("""
-        SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
+        SELECT l_returnflag, l_linestatus, COUNT(_real) AS n_rows,
                CAST(FLOOR(SUM(CAST(l_quantity AS DECIMAL(18,6))) * 100)
                     AS BIGINT) AS qty_cents
         FROM _gs_lineitem
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
+        HAVING COUNT(_real) > 0
+            OR GROUPING_ID(l_returnflag, l_linestatus) = 3
     """)
 
 

@@ -830,6 +830,45 @@ def test_rollup_flag_status_empty_lineitem_matches_native(spark, tmp_path):
     assert [tuple(r) for r in got] == want
 
 
+def _empty_copy_matches_oracle(spark, tmp_path, table: str,
+                               query: str) -> list[tuple]:
+    """Run ``query`` and its DuckDB oracle over an empty copy of
+    ``table``; assert equal rows and return them."""
+    import duckdb
+
+    from pyspark_etl_project_spark.plans.analytics_plans import (ORACLE,
+                                                                 QUERIES)
+
+    sf = str(tmp_path)
+    spark.read.parquet(f"{SF_SMALL}/{table}.parquet").limit(0) \
+        .write.parquet(f"{sf}/{table}.parquet")
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW {table} AS SELECT * FROM "
+                f"'{sf}/{table}.parquet/*.parquet'")
+    want = con.execute(ORACLE[query]).fetchall()
+    got = [tuple(r) for r in QUERIES[query](spark, sf).collect()]
+    assert got == want
+    return got
+
+
+def test_cube_event_stats_empty_events_matches_native(spark, tmp_path):
+    """On an empty events table CUBE still emits the grand-total row
+    (gid 3, COUNT 0, SUM NULL), as the DuckDB oracle's native CUBE
+    does; Spark's native cube emits nothing."""
+    got = _empty_copy_matches_oracle(spark, tmp_path, "events",
+                                     "cube_event_stats")
+    assert got == [(None, None, 3, 0, None)]
+
+
+def test_grouping_sets_flag_status_empty_lineitem_matches_native(
+        spark, tmp_path):
+    """On an empty lineitem the () grouping set still emits the
+    grand-total row (COUNT 0, SUM NULL), as the DuckDB oracle does."""
+    got = _empty_copy_matches_oracle(spark, tmp_path, "lineitem",
+                                     "grouping_sets_flag_status")
+    assert got == [(None, None, 0, None)]
+
+
 def test_variant_extract_reads_only_type_and_props(spark):
     """variant_props_extract on the events table must read exactly
     (event_type, props) — the VARIANT parse must not force a full-row
