@@ -43,8 +43,8 @@ colliding input is consumed, never corrupted: the engine value always
 wins and the output schema is a fixed projection. Collision
 value-equivalence tests pin that claim (tests/test_reserved_columns.py).
 Staging that rides in via a JOIN against an engine aggregate (e.g.
-weighted_sample's ``_quota``) fails loudly on its own as a duplicate-
-column AnalysisException.
+weighted_sample's ``_quota``, scd2_merge's ``_scd2_hit``) fails loudly
+on its own as a duplicate-column AnalysisException.
 """
 
 from __future__ import annotations

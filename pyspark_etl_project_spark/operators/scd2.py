@@ -4,12 +4,12 @@ Replaces the reference's driver-side row loop
 (/root/reference/ETL/CSV_Batch_Processing.py:247-334: toPandas() collect,
 then per-row SQLAlchemy INSERT/UPDATE) with a pure-DataFrame rewrite:
 
-    expired   = active mart rows whose key is being updated
-                -> ACTIVE_FLAG=0, END_DATE=run_ts
-    survivors = all other mart rows, unchanged
+    history   = every mart row, in one scan; an active row whose key is
+                being updated -> ACTIVE_FLAG=0, END_DATE=run_ts, every
+                other row unchanged
     arrivals  = routed INSERT/UPDATE rows
                 -> ACTIVE_FLAG=1, START_DATE=run_ts, END_DATE=2099-12-31
-    result    = survivors UNION expired UNION arrivals
+    result    = history UNION arrivals
 
 Invariants (FIXTURES.md §5): exactly one ACTIVE_FLAG=1 row per
 (SOURCE_ID, SOURCE_SYSTEM_IDENTIFIER); expired END_DATE equals the
@@ -20,9 +20,10 @@ Scale notes:
 - run_ts is a single per-run constant (H9) -> deterministic and identical
   across executors (the reference evaluated datetime.now() driver-side
   once, same semantics).
-- The anti/semi split on the update key set is one broadcast join when the
-  arrival batch is small (typical incremental load), else a shuffled hash
-  join co-partitioned on the natural key.
+- The expiry match is one left join of the mart to the distinct update
+  keys: a broadcast join when the arrival batch is small (typical
+  incremental load), else a shuffled join on the natural key. The mart
+  is scanned once.
 - The mart is stored partitionBy(SOURCE_ID, MART_BUCKET) where the
   bucket is a deterministic hash of the natural key: dynamic partition
   overwrite plus a touched-keys prune means a load rewrites only the
@@ -44,6 +45,8 @@ from pyspark.sql import functions as F
 from pyspark_etl_project_spark.config import SCD2_OPEN_END_DATE
 
 KEY = "SOURCE_SYSTEM_IDENTIFIER"
+# scd2_merge's reserved flag: set on mart rows whose key is arriving.
+_HIT = "_scd2_hit"
 
 
 def scd2_merge(mart: DataFrame,
@@ -62,7 +65,7 @@ def scd2_merge(mart: DataFrame,
 
     ``cache_arrivals`` persists the arrival batch (memory-and-disk):
     it is consumed twice — once projected to its key set for the
-    expired/survivor split, once in full as the fresh rows — and the
+    expiry match, once in full as the fresh rows — and the
     batch is the small side of an incremental merge (the mart is the big
     side and is never cached), so caching trades a little executor
     memory for not running the upstream transform chain twice.
@@ -89,21 +92,20 @@ def scd2_merge(mart: DataFrame,
         if pinned is not None:
             pinned.append(arrivals)
 
-    arriving_keys = arrivals.select(key).distinct()
+    arriving_keys = (arrivals.select(key).distinct()
+                     .withColumn(_HIT, F.lit(True)))
     keys_join = F.broadcast(arriving_keys) if broadcast_keys else arriving_keys
 
-    # Null-safe split: `!= 1` would evaluate NULL for a NULL
-    # ACTIVE_FLAG (legacy load, schema-evolved read) and the row would
-    # match NEITHER branch — silently vanishing from the rewritten
-    # mart. eqNullSafe routes such rows to `inactive` (preserved
-    # verbatim) instead.
-    active = mart.filter(F.col("ACTIVE_FLAG").eqNullSafe(1))
-    inactive = mart.filter(~F.col("ACTIVE_FLAG").eqNullSafe(1))
-
-    expired = (active.join(keys_join, on=key, how="left_semi")
-                     .withColumn("ACTIVE_FLAG", F.lit(0))
-                     .withColumn("END_DATE", run_ts_col))
-    survivors = active.join(keys_join, on=key, how="left_anti")
+    # One pass over the mart: the left join flags rows whose key is
+    # arriving (keys are distinct, so no row multiplies) and the
+    # projection expires the flagged active ones. Null-safe: a NULL
+    # ACTIVE_FLAG (legacy load, schema-evolved read) is not `<=> 1`, so
+    # the row passes through verbatim instead of being expired.
+    expire = F.col("ACTIVE_FLAG").eqNullSafe(1) & F.col(_HIT).isNotNull()
+    stamped = {"ACTIVE_FLAG": F.lit(0), "END_DATE": run_ts_col}
+    history = mart.join(keys_join, on=key, how="left").select(
+        [F.when(expire, stamped[c]).otherwise(F.col(c)).alias(c)
+         if c in stamped else F.col(c) for c in mart.columns])
 
     next_id = (surrogate_offset if surrogate_offset is not None
                else _surrogate_offset(mart, surrogate_col))
@@ -114,11 +116,7 @@ def scd2_merge(mart: DataFrame,
     fresh = _assign_surrogates(fresh, surrogate_col, next_id, key,
                                dense_ids, pinned=pinned)
 
-    cols = mart.columns
-    return (inactive.select(cols)
-            .unionByName(survivors.select(cols))
-            .unionByName(expired.select(cols))
-            .unionByName(fresh.select(cols)))
+    return history.unionByName(fresh.select(mart.columns))
 
 
 MART_BUCKET_COL = "MART_BUCKET"
@@ -245,9 +243,18 @@ def write_mart(mart: DataFrame, path: str,
     double rows on read).
     ``partition_col=None`` drops the source dimension (single-feed
     marts, e.g. a streaming user mart) — buckets alone partition.
-    ``materialize_first`` persists + counts the outgoing rows before the
-    write: required when the merge plan READS the same path the write
-    overwrites (the foreachBatch read-merge-rewrite loop).
+    The outgoing rows are clustered on (``partition_col``, bucket) by a
+    rebalance hint, so each bucket dir gets one file (AQE sizes and
+    coalesces the shuffle partitions) instead of one file per task
+    that holds any of its rows.
+    ``materialize_first`` no longer does anything; it stays for callers
+    that pass it. A plan that READS the path it overwrites needs no
+    materialization: dynamic partition overwrite writes every task's
+    output to a ``.spark-staging-*`` dir and replaces the partition
+    dirs only at job commit, after every task (and so every read of
+    the old files) has finished. Nor is the input persisted here: at
+    commit Spark re-plans every cached plan that reads the written
+    path.
     ``check_layout=False`` skips the pre-write layout probe — ONLY for
     a caller that already verified the layout this run and owns the
     mart for the run's duration (the foreachBatch merge loop checks
@@ -269,21 +276,14 @@ def write_mart(mart: DataFrame, path: str,
         out = out.join(F.broadcast(buckets), MART_BUCKET_COL, "left_semi")
     if source_id is not None and partition_col is not None:
         out = out.filter(F.col(partition_col) == source_id)
-    if materialize_first:
-        from pyspark.storagelevel import StorageLevel
-
-        out = out.persist(StorageLevel.MEMORY_AND_DISK)
-        out.count()
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        (out.write.mode("overwrite")
+        (out.hint("rebalance", *parts).write.mode("overwrite")
             .partitionBy(*parts)
             .parquet(path))
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        if materialize_first:
-            out.unpersist()
 
 
 def read_mart(spark, path: str, merge_schema: bool = False) -> DataFrame:
@@ -733,8 +733,6 @@ def vacuum_mart_path(spark, path: str, horizon_ts: str,
     Run it BETWEEN loads/streams, like every maintenance pass here:
     dynamic overwrite of a mart another writer owns mid-run would
     interleave two rewrite sets."""
-    from pyspark.storagelevel import StorageLevel
-
     from pyspark_etl_project_spark.operators.fs import (
         escape_glob, hadoop_fs)
 
@@ -817,16 +815,15 @@ def vacuum_mart_path(spark, path: str, horizon_ts: str,
         # partition values verbatim), filter, and dynamic-overwrite
         # exactly those leaves — every touched leaf has at least one
         # survivor (max END >= horizon), so none is silently skipped.
+        # The read feeds the overwrite of the same leaves with no
+        # materialization: write_mart's staged commit isolates it.
         kept = vacuum_expired(
             spark.read.schema(schema).option("basePath", path)
                  .parquet(*[escape_glob(d) for d in dirs])
                  .drop(MART_BUCKET_COL),
-            horizon_ts).persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            write_mart(kept, path, partition_col=partition_col, key=key,
-                       num_buckets=num_buckets, materialize_first=True)
-        finally:
-            kept.unpersist()
+            horizon_ts)
+        write_mart(kept, path, partition_col=partition_col, key=key,
+                   num_buckets=num_buckets)
 
     if dead:
         from collections import defaultdict

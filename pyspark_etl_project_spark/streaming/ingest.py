@@ -364,7 +364,6 @@ def scd2_merge_batch(spark: SparkSession, batch: DataFrame, mart_path: str,
                 write_mart(merged, mart_path, partition_col=partition_col,
                            key=key, num_buckets=num_buckets,
                            touched_keys=routed.select(key).distinct(),
-                           materialize_first=True,
                            check_layout=check_layout)
             finally:
                 # Release this batch's pins (the dense-id range
@@ -421,8 +420,8 @@ def foreach_batch_scd2(stream: DataFrame, mart_path: str, initial_mart: DataFram
     micro-batch touches a handful of buckets, never the whole mart, and
     the surrogate-id offset comes from a per-run high-watermark instead
     of a per-batch full-mart MAX. The merge plan reads the same path it
-    overwrites, so the pruned output is materialized (persist + count)
-    before the write.
+    overwrites; write_mart's staged dynamic-overwrite commit replaces
+    the bucket dirs only after every read of them has finished.
     ``prepare`` optionally pre-collapses each raw micro-batch to
     merge-ready arrivals (e.g. latest-per-key within the batch — the
     reference's E1 dedup before CDC). Batch sizes are bounded by

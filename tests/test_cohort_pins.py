@@ -117,7 +117,7 @@ PINS_R13 = {
     "embedding_quantized_topk": (0, ['vec_id,embedding']),
     "embedding_topk_batched": (1, ['vec_id,embedding', 'vec_id,embedding']),
     "etl_csv_pipeline_full": (5, ['o_orderkey,o_orderstatus,o_orderdate,o_orderpriority']),
-    "etl_csv_two_load_incremental": (8, ['o_orderkey,o_orderstatus,o_orderdate,o_orderpriority']),
+    "etl_csv_two_load_incremental": (6, ['o_orderkey,o_orderstatus,o_orderdate,o_orderpriority']),
     "etl_json_pipeline_full": (5, ['o_orderkey,o_orderstatus,o_orderdate,o_orderpriority', 'o_orderkey,o_orderstatus,o_orderdate,o_orderpriority']),
     "etl_xml_pipeline_full": (5, ['o_orderkey,o_orderstatus,o_orderdate,o_orderpriority', 'o_orderkey,o_orderstatus,o_orderdate,o_orderpriority']),
     "group_minmax_normalize": (1, ['event_id,event_type,value']),
@@ -127,7 +127,7 @@ PINS_R13 = {
     "retention_latest_per_group": (1, ['event_id,event_type']),
     "salted_join_supplier_agg": (1, ['l_suppkey,l_quantity', 's_suppkey,s_nationkey']),
     "salted_skew_agg": (2, ['l_quantity,l_extendedprice,l_returnflag']),
-    "scd2_asof_snapshot": (8, ['o_orderkey,o_orderstatus,o_orderdate,o_orderpriority']),
+    "scd2_asof_snapshot": (7, ['o_orderkey,o_orderstatus,o_orderdate,o_orderpriority']),
     "scd2_vacuum_expired": (6, ['o_orderkey,o_orderstatus,o_orderdate,o_orderpriority']),
     "scd2_vacuum_roundtrip": (0, ['csd_id,ssi,c_mktsegment,active_flag,START_DATE,END_DATE']),
     "scd2_vacuum_type_widened": (0, ['csd_id,ssi,END_DATE']),
@@ -289,7 +289,7 @@ PINS_REST = {
     # tiny re-agg exchanges over the 6-row intermediate.
     "rollup_flag_status": (3, []),
     "scan_filter_project": (0, ['l_extendedprice,l_linenumber,l_orderkey,l_quantity,l_shipdate']),
-    "scd2_merge": (6, ['c_custkey,c_mktsegment,c_name', 'c_custkey,c_mktsegment,c_name', 'c_custkey,c_mktsegment,c_name', 'c_custkey,c_mktsegment,c_name']),
+    "scd2_merge": (5, ['c_custkey,c_mktsegment,c_name', 'c_custkey,c_mktsegment,c_name', 'c_custkey,c_mktsegment,c_name']),
     "semi_anti_customers": (0, ['c_custkey,c_name', 'o_custkey,o_orderpriority', 'c_custkey,c_name', 'o_custkey,o_orderdate']),
     "session_basket_lift": (7, []),
     "session_window_native": (1, ['ts,user_id']),
